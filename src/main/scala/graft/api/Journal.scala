@@ -23,8 +23,15 @@ import graft.journal.{JournalOps, Replicate, Replay}
 final class Journal(
     val spark: SparkSession,
     log: DataFrame,
-    store: Replicate.Store
+    replicated: => Replicate.Store
 ) {
+
+  // only [[offsets]] reads the replicated store: build (and analyse) it
+  // on first use, not per handle
+  private lazy val store = replicated
+
+  private def keyed(df: DataFrame, topic: String, id: String): DataFrame =
+    df.filter(col("topic") === topic && col("id") === id)
 
   /** Events of one journal from `fromSeqNr`, replay order — the recovery
     * query (reference Journals.scala:194-301): merged store prefix + log
@@ -44,7 +51,7 @@ final class Journal(
   ): DataFrame =
     Replay
       .mergedRead(
-        log.filter(col("topic") === topic && col("id") === id),
+        keyed(log, topic, id),
         strictUniqueness = strict
       )
       .filter(col("seq_nr") >= fromSeqNr)
@@ -85,33 +92,31 @@ final class Journal(
   /** [[read]] THROUGH the maintained head cache — the reference client's
     * actual read flow (Journals.scala:141-175: every read first consults
     * the HeadCache and skips the Kafka tail when the cached head proves it
-    * holds nothing to replay). The tail leg is semi-joined against the
-    * cache's append-heads ([[graft.journal.Replay.mergedReadGated]]), so a
-    * journal the cache shows fully replicated (or tail-empty) never enters
-    * the tail scan at all. Row-identical to [[read]] by the HeadCacheSpec
-    * law, re-proved at this surface in JournalOpsSpec.
+    * holds nothing to replay). Row-identical to
+    * [[graft.journal.Replay.mergedReadAtWatermark]] over the key's log,
+    * cached head and the cache's stored watermark (CachedReplaySpec), and
+    * so to [[read]] (the gated-read law, re-proved at this surface in
+    * JournalOpsSpec).
     *
-    * The eventual/tail boundary is the CACHE'S OWN stored watermark
-    * ([[graft.journal.Replay.mergedReadAtWatermark]]) — the mark the
-    * cache evicted at — so a journal ABSENT from the cache (fully
-    * replicated) is served completely by the eventual leg: positioning
-    * the boundary anywhere below the cache's watermark would silently
-    * drop an evicted journal's rows between the marks. The cache is
-    * replication-lag-sized by construction, hence broadcastable.
+    * It runs as ONE keyed fold ([[graft.journal.CachedReplay.read]]):
+    * the log, the journal's head-cache entries and its topic's watermark
+    * rows are each scanned with the key predicate, unioned, grouped once
+    * on (topic, id) and folded in Scala — one exchange, no global sort.
     *
-    * Staleness contract (self-contained — the deployment doc's proviso,
-    * stated AND enforced here): gated-read ≡ read requires the cache to
-    * have consumed the log up to each partition's current end (the
-    * deployment tick order guarantees the cache trails replication by
-    * exactly one tick). When the cache is STALE — the log holds rows at
-    * or past a partition's stored `end_offset` (appends after the last
-    * drain) — those journals' tails are UN-GATED rather than trusted:
-    * the read stays row-identical to [[read]] and pays an ungated tail
-    * scan on exactly the stale journals (enforced in
-    * [[graft.journal.Replay.mergedReadAtWatermark]], probed in
-    * JournalOpsSpec's stale-cache law). Partitions the cache has NEVER
-    * covered read wm = −1 with their tails ungated likewise — absence
-    * from the cache is only evidence where the cache has coverage.
+    * The eventual/tail boundary of each log row is the cache's stored
+    * watermark for that row's partition — the mark the cache evicted at
+    * — so a journal ABSENT from the cache (fully replicated) is served
+    * completely by the eventual leg. The tail of appends above it is read
+    * only when the gate opens:
+    *   - the cached head is an `append`;
+    *   - or the journal has a row in a partition the cache never covered
+    *     (no stored end offset: absence from the cache is only evidence
+    *     where the cache has coverage);
+    *   - or the journal has a row at or past its partition's stored
+    *     `end_offset` — the cache is STALE (appends after the last
+    *     drain), so its silence is not trusted.
+    * A reader of a stale cache therefore pays the tail on exactly the
+    * stale journals and stays row-identical to [[read]].
     */
   def readCached(
       topic: String,
@@ -120,15 +125,8 @@ final class Journal(
       fromSeqNr: Long = 1L,
       strict: Boolean = false
   ): DataFrame =
-    Replay
-      .mergedReadAtWatermark(
-        log.filter(col("topic") === topic && col("id") === id),
-        graft.streaming.StreamingHeadCache
-          .readHeads(spark, cacheDir)
-          .filter(col("topic") === topic && col("id") === id),
-        graft.streaming.StreamingHeadCache.watermark(spark, cacheDir),
-        strictUniqueness = strict
-      )
+    graft.journal.CachedReplay
+      .read(spark, keyed(log, topic, id), cacheDir, topic, id, strict)
       .filter(col("seq_nr") >= fromSeqNr)
 
   /** [[pointer]] with the head-cache fast path — the reference's pointer
@@ -137,21 +135,21 @@ final class Journal(
     * seq_nr — no log or store scan runs at all); a `purge` head answers
     * "no pointer" likewise for free; an `empty`/`delete` head — or a
     * journal absent from the cache (fully replicated) — falls back to the
-    * eventual [[pointer]] query. The cache row is a driver-bounded
-    * single-row collect (readHeads merges to one row per journal), which
-    * is what lets the fallback scan be skipped rather than merely pruned.
+    * eventual [[pointer]] query. The head comes from one collect of the
+    * journal's key-filtered entry rows and its topic's watermark rows,
+    * merged on the driver exactly as [[readCached]]'s fold merges them;
+    * the cache answers are local relations (no further job).
     */
   def pointerCached(topic: String, id: String, cacheDir: String): DataFrame = {
-    val head = graft.streaming.StreamingHeadCache
-      .readHeads(spark, cacheDir)
-      .filter(col("topic") === topic && col("id") === id)
-      .select("kind", "head_seq_nr")
-      .collect() // ≤ 1 row: the cache merges per journal
-    head.headOption.map(_.getString(0)) match {
-      case Some("append") =>
-        spark.range(1).select(lit(head.head.getLong(1)).as("seq_nr"))
-      case Some("purge") =>
-        spark.range(0).select(col("id").as("seq_nr")) // no pointer
+    import graft.journal.{CachedReplay, HeadInfo}
+    def answer(seqNrs: Long*): DataFrame =
+      spark.createDataFrame(
+        java.util.Arrays.asList(seqNrs.map(org.apache.spark.sql.Row(_)): _*),
+        org.apache.spark.sql.types.StructType.fromDDL("seq_nr BIGINT")
+      )
+    CachedReplay.headOf(CachedReplay.cacheRows(spark, cacheDir, topic, id).collect().toSeq) match {
+      case Some(HeadInfo.Append(_, seqNr, _)) => answer(seqNr)
+      case Some(HeadInfo.Purge)               => answer() // no pointer
       case _ => pointer(topic, id) // empty/delete head, or fully replicated
     }
   }
@@ -166,7 +164,7 @@ final class Journal(
     */
   def recover(topic: String, id: String): DataFrame =
     graft.journal.Snapshots.recovery(
-      log.filter(col("topic") === topic && col("id") === id)
+      keyed(log, topic, id)
     )
 
   /** [[recover]] through an EXPLICIT snapshot table — the read path of
@@ -185,23 +183,26 @@ final class Journal(
       id: String
   ): DataFrame =
     graft.journal.Snapshots.recoveryWith(
-      log.filter(col("topic") === topic && col("id") === id),
-      snapshots
-        .filter(col("topic") === topic && col("id") === id)
+      keyed(log, topic, id),
+      keyed(snapshots, topic, id)
         .select("topic", "id", "seq_nr", "koffset", "payload")
     )
 
   /** The reference client's FULL recovery flow — BOTH accelerators at
     * once (Journals.scala:141-175 feeding the recovery flow: the
     * SnapshotStore supplies the fold floor AND the HeadCache gates the
-    * Kafka tail): the latest stored snapshot plus only the events after
-    * it, with the event leg read THROUGH the maintained head cache
-    * ([[readCached]]'s gated merge — a journal the cache proves fully
-    * replicated never enters the tail scan). Row-identical to
-    * [[recoverThrough]] by composition of the two laws (snapshot-floor ≡
-    * and gated-read ≡), including evicted-journal and stale-cache paths —
-    * [[readCached]]'s staleness contract applies verbatim to the event
-    * leg here.
+    * Kafka tail): the latest snapshot plus only the events after it, with
+    * the event leg read THROUGH the maintained head cache ([[readCached]]'s
+    * gate and staleness contract, verbatim). Row-identical to
+    * [[graft.journal.Snapshots.recoveryOver]] of the gated read and the
+    * key's snapshots (CachedReplaySpec), hence to [[recoverThrough]],
+    * including the evicted-journal and stale-cache paths.
+    *
+    * One keyed fold ([[graft.journal.CachedReplay.recover]]): the log,
+    * the head-cache rows and the key-filtered `snapshots` frame
+    * (e.g. [[graft.streaming.StreamingSnapshots.storedSnapshots]], which
+    * lets the key predicate reach its scans) are unioned and grouped once
+    * on (topic, id); the `src`-tagged rows come out in seq_nr order.
     */
   def recoverCached(
       topic: String,
@@ -209,25 +210,19 @@ final class Journal(
       snapshots: DataFrame,
       cacheDir: String
   ): DataFrame =
-    graft.journal.Snapshots.recoveryOver(
-      Replay
-        .mergedReadAtWatermark(
-          log.filter(col("topic") === topic && col("id") === id),
-          graft.streaming.StreamingHeadCache
-            .readHeads(spark, cacheDir)
-            .filter(col("topic") === topic && col("id") === id),
-          graft.streaming.StreamingHeadCache.watermark(spark, cacheDir)
-        )
-        .select("topic", "id", "seq_nr", "koffset", "payload"),
-      snapshots
-        .filter(col("topic") === topic && col("id") === id)
-        .select("topic", "id", "seq_nr", "koffset", "payload")
+    graft.journal.CachedReplay.recover(
+      spark,
+      keyed(log, topic, id),
+      keyed(snapshots, topic, id),
+      cacheDir,
+      topic,
+      id
     )
 
   /** Highest appended seqNr of one journal (None ⇒ empty row set). */
   def pointer(topic: String, id: String): DataFrame =
     JournalOps
-      .pointer(log.filter(col("topic") === topic && col("id") === id))
+      .pointer(keyed(log, topic, id))
       .select("seq_nr")
 
   /** Append actions for a key onto the caller-provided log sink: stamps
@@ -272,7 +267,7 @@ final class Journal(
     */
   def delete(topic: String, id: String, to: Long): DataFrame = {
     val ptr = JournalOps
-      .pointer(log.filter(col("topic") === topic && col("id") === id))
+      .pointer(keyed(log, topic, id))
       .select(col("seq_nr").as("ptr"))
     ptr.select(
       lit(topic).as("topic"),

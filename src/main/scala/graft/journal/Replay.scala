@@ -43,6 +43,13 @@ object Replay {
     "tags_csv", "origin", "version", "metadata"
   )
 
+  /** The replay's output columns over `actions`: the contract's six plus
+    * whichever [[carried]] columns the log has.
+    */
+  private[graft] def outColumns(actions: DataFrame): Seq[String] =
+    Seq("topic", "id", "seq_nr", "koffset", "ts", "payload") ++
+      carried.filter(actions.columns.contains)
+
   def mergedRead(
       actions: DataFrame,
       wmFrac: Double = 0.8,
@@ -86,9 +93,11 @@ object Replay {
     )
 
   /** The gated read at an EXPLICIT replicated watermark — the deployment
-    * read path (api.Journal.readCached): the eventual/tail boundary is
-    * the CACHE'S OWN stored watermark instead of a wmFrac positioned over
-    * the (possibly key-filtered) log, which is what makes the gate's
+    * read path over any number of journals (the j1c query; for ONE
+    * journal, api.Journal.readCached runs the same semantics as a keyed
+    * fold, [[CachedReplay]], checked against this form): the eventual/tail
+    * boundary is the CACHE'S OWN stored watermark instead of a wmFrac
+    * positioned over the (possibly key-filtered) log, which is what makes the gate's
     * skip-on-absence sound — a journal evicted from the cache has no
     * rows above THIS watermark by the eviction invariant, so the eventual
     * leg (≤ wm) covers it completely. Positioning the boundary anywhere
@@ -197,8 +206,7 @@ object Replay {
       strictUniqueness: Boolean,
       tailGate: Option[DataFrame]
   ): DataFrame = {
-    val outCols = Seq("topic", "id", "seq_nr", "koffset", "ts", "payload") ++
-      carried.filter(actions.columns.contains)
+    val outCols = outColumns(actions)
     val bounded = actions.join(broadcast(bounds), Seq("topic", "part_no"))
 
     // Eventual leg: what the replicator materialized — delete/purge state

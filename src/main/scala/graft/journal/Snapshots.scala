@@ -148,10 +148,12 @@ object Snapshots {
   /** [[recoveryWith]] over an EXPLICIT replay frame (topic, id, seq_nr,
     * koffset, payload) — the seam that lets the event leg come from ANY
     * read formulation: [[recoveryWith]] passes the ungated merged read;
-    * the api's `recoverCached` passes the head-cache-GATED read
+    * the j1c query passes the head-cache-GATED read
     * ([[graft.journal.Replay.mergedReadAtWatermark]]), composing the
     * reference client's two recovery accelerators (snapshot floor +
-    * cache-gated tail) in one query.
+    * cache-gated tail) in one query. The api's one-journal
+    * `recoverCached` runs this composition as a keyed fold
+    * ([[CachedReplay.recover]]), checked against it.
     */
   def recoveryOver(replay: DataFrame, snapshots: DataFrame): DataFrame = {
     val pick = Window.partitionBy("topic", "id").orderBy(col("seq_nr").desc)

@@ -103,29 +103,39 @@ object StreamingHeadCache {
 
   /** Crash-safe per-layer write: the frame is FULLY written to a hidden
     * staging directory (Spark's file index skips dot-prefixed entries),
-    * then the target `layer=N` directory is replaced by delete+rename.
-    * A crash mid-WRITE leaves any previously committed copy of the layer
-    * intact — the durability the superseded dynamic-partition-overwrite
-    * write had at job commit, kept under the round-17 one-directory-per-
-    * layer layout (whose point is that CONCURRENT layer appends never
-    * share commit staging); the vulnerable window shrinks to the
-    * delete+rename itself. Orphaned staging dirs from a crash are
-    * invisible to readers and overwritten/ignored thereafter.
+    * then published without ever destroying the committed copy first:
+    * the current `layer=N` (a redelivered batch's earlier write) is
+    * renamed aside, staging is moved into place, and only then is the
+    * aside copy deleted. A failed move puts the aside copy back, so a
+    * failed publish leaves the prior layer readable. A crash mid-WRITE
+    * leaves the committed layer untouched; orphaned staging dirs are
+    * invisible to readers and ignored thereafter. `publish` is the
+    * staging → target move (a seam for the failed-publish spec).
     */
-  private def writeLayer(df: DataFrame, memberDir: String, layer: Long): Unit = {
+  private[graft] def writeLayer(
+      df: DataFrame,
+      memberDir: String,
+      layer: Long,
+      publish: (String, String) => Boolean = graft.util.Blob.move
+  ): Unit = {
     // Blob-backed (URI-aware): the store root can be a plain path or a
     // hadoop-file-uri root (the UriStoreSpec deployments)
-    val staging = graft.util.Loc.join(
-      memberDir,
-      s".layer-$layer-staging-${java.util.UUID.randomUUID()}"
-    )
+    val run = java.util.UUID.randomUUID()
+    val staging = graft.util.Loc.join(memberDir, s".layer-$layer-staging-$run")
     df.write.mode("overwrite").parquet(staging)
     val target = graft.util.Loc.join(memberDir, s"layer=$layer")
-    graft.util.Blob.deleteTree(target) // tolerant of absence
-    require(
-      graft.util.Blob.move(staging, target),
-      s"head-cache layer publish failed: $staging -> $target"
-    )
+    val aside = graft.util.Loc.join(memberDir, s".layer-$layer-old-$run")
+    val hadOld = graft.util.Blob.exists(target) && graft.util.Blob.move(target, aside)
+    def restore(): Unit = if (hadOld) { graft.util.Blob.move(aside, target); () }
+    val published =
+      try publish(staging, target)
+      catch { case e: Throwable => restore(); throw e }
+    if (!published) {
+      restore()
+      throw new IllegalStateException(
+        s"head-cache layer publish failed: $staging -> $target")
+    }
+    if (hadOld) graft.util.Blob.deleteTree(aside)
   }
 
   /** The per-(journal, batch) partial fold of `actions` (an action-log
@@ -252,6 +262,23 @@ object StreamingHeadCache {
       .select("topic", "part_no", "wm", "end_offset")
   }
 
+  /** One journal's entry rows and its topic's watermark rows, each scan
+    * carrying the key predicate — the head-cache inputs of the one-journal
+    * fold ([[graft.journal.CachedReplay]]).
+    */
+  private[graft] def keyedLayers(
+      spark: SparkSession,
+      storeDir: String,
+      topic: String,
+      id: String
+  ): (DataFrame, DataFrame) = {
+    repairHeadCache(storeDir)
+    (
+      readEntries(spark, storeDir).filter(col("topic") === topic && col("id") === id),
+      readWm(spark, storeDir).filter(col("topic") === topic)
+    )
+  }
+
   /** The merged per-partition (watermark, end offset) view. */
   private def wmView(spark: SparkSession, storeDir: String): DataFrame =
     readWm(spark, storeDir)
@@ -262,7 +289,7 @@ object StreamingHeadCache {
     * discipline of [[HeadInfo.perJournalSalted]] made associative, so
     * read-merge and compaction-merge compose in any grouping.
     */
-  private def combinePurged(
+  private[graft] def combinePurged(
       a: (Boolean, HeadInfo),
       b: (Boolean, HeadInfo)
   ): (Boolean, HeadInfo) =

@@ -135,21 +135,30 @@ object StreamingSnapshots {
   /** The stored snapshot table's read view: purge-invalidated rows
     * filtered (a snapshot taken before the journal's last purge describes
     * a dead incarnation), duplicates collapsed.
+    *
+    * One keyed pass: the snaps and ptr rows are unioned, and the
+    * journal's purge offset (the max of its pointer partials', as
+    * [[mergedPointers]] merges it) reaches its snapshot rows through a
+    * window on (topic, id); the dedup reuses that partitioning. Every
+    * operator is keyed on (topic, id), so a key filter on the result
+    * reaches both scans — a one-journal recovery reads only that
+    * journal's rows.
     */
-  def storedSnapshots(spark: SparkSession, storeDir: String): DataFrame =
+  def storedSnapshots(spark: SparkSession, storeDir: String): DataFrame = {
+    val cols = Seq("topic", "id", "seq_nr", "koffset", "ts", "payload")
     readSnaps(spark, storeDir)
-      .join(
-        mergedPointers(spark, storeDir)
-          .select("topic", "id", "purge_koffset"),
-        Seq("topic", "id"),
-        "left"
+      .select(cols.map(col) :+ lit(true).as("is_snap"): _*)
+      .unionByName(
+        readPtr(spark, storeDir).select("topic", "id", "purge_koffset"),
+        allowMissingColumns = true // a ptr row's is_snap is null
       )
+      .withColumn("pk", max("purge_koffset").over(Window.partitionBy("topic", "id")))
       .filter(
-        col("purge_koffset").isNull || col("purge_koffset") < 0 ||
-          col("koffset") > col("purge_koffset")
+        col("is_snap") && (col("pk").isNull || col("pk") < 0 || col("koffset") > col("pk"))
       )
-      .select("topic", "id", "seq_nr", "koffset", "ts", "payload")
+      .select(cols.map(col): _*)
       .dropDuplicates("topic", "id", "seq_nr")
+  }
 
   /** Ingests one micro-batch of actions: stores the batch's pointer
     * partial, computes every touched journal's debt against the merged

@@ -302,4 +302,31 @@ class HeadCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     parts.unpersist(false)
     a.unpersist(false)
   }
+
+  test("a failed layer publish leaves the committed layer readable") {
+    val a = actions.cache()
+    val storeDir = Files.createTempDirectory("graft-head-publish").toString
+    val wm = JournalOps.defaultWatermark(a)
+    StreamingHeadCache.appendBatch(spark, a, storeDir, wm, layer = 1L)
+    val before = rows(storeDir)
+    assert(before.nonEmpty)
+    // a redelivery rewrites layer 1 with different rows; its move into
+    // place fails — by a lost rename, then by a storage error
+    val entries = graft.util.DirSwap.resolve(storeDir, "entries").toString
+    val other = StreamingHeadCache.partialFolds(spark, a.filter(col("koffset") < 5))
+    intercept[IllegalStateException] {
+      StreamingHeadCache.writeLayer(other, entries, 1L, publish = (_, _) => false)
+    }
+    assert(rows(storeDir) == before, "the prior layer survives a refused move")
+    intercept[java.io.IOException] {
+      StreamingHeadCache.writeLayer(
+        other, entries, 1L, publish = (_, _) => throw new java.io.IOException("disk gone"))
+    }
+    assert(rows(storeDir) == before, "the prior layer survives a failing move")
+    // a working publish replaces the layer and leaves no aside copy
+    StreamingHeadCache.writeLayer(other, entries, 1L)
+    assert(rows(storeDir) != before)
+    assert(!graft.util.Blob.children(entries).exists(graft.util.Loc.name(_).contains("-old-")))
+    a.unpersist(false)
+  }
 }
