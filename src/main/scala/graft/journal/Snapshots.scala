@@ -61,13 +61,6 @@ object Snapshots {
       .orderBy("topic", "id")
   }
 
-  /** delete-by-criteria: remaining snapshots after dropping matches. */
-  def deleteBy(actions: DataFrame, c: Criteria): DataFrame =
-    table(actions)
-      .filter(!matches(c))
-      .select("topic", "id", "buffer_nr", "seq_nr")
-      .orderBy("topic", "id", "seq_nr")
-
   /** The SAVE path: snapshots upsert into a per-journal ring buffer of
     * `bufferSize` slots keyed `(topic, id, buffer_nr)` — the n-th save of
     * a journal lands in slot `n % bufferSize`, overwriting the slot's

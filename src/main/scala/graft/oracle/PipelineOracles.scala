@@ -4016,7 +4016,7 @@ object PipelineOracles {
     * initial 3/4, frozen-quantizer assignment, nprobe=2 search). The
     * lexical and proximity legs replay the inline arithmetic their stored
     * forms are row-identical to (RetrievalIndexSpec laws); the dense leg
-    * replays knnIvfIndexedExact's (IndexStoreSpec law) — so this SQL is
+    * replays knnIvfIndexedExactOf's (IndexStoreSpec law) — so this SQL is
     * the three-store production query end to end.
     */
   private def hybridStoredSql(

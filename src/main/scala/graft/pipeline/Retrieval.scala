@@ -37,17 +37,21 @@ object Retrieval {
     * the doc twice) — same class of corruption the append contract
     * already names, now uniform across build and append.
     */
-  private case class TermTf(w: String, tf: Long)
-  private val termCounts =
-    udf((ws: Seq[String]) =>
-      if (ws == null) Seq.empty[TermTf]
-      else {
-        val m = new java.util.LinkedHashMap[String, Long]
-        ws.foreach(w => m.put(w, m.getOrDefault(w, 0L) + 1L))
-        val out = new scala.collection.mutable.ArrayBuffer[TermTf](m.size)
-        m.forEach((w, n) => out += TermTf(w, n))
-        out.toSeq
-      })
+  private def termCounts(ws: Seq[String]): Seq[(String, Long)] =
+    if (ws == null) Seq.empty
+    else {
+      val m = new java.util.LinkedHashMap[String, Long]
+      ws.foreach(w => m.put(w, m.getOrDefault(w, 0L) + 1L))
+      val out = new scala.collection.mutable.ArrayBuffer[(String, Long)](m.size)
+      m.forEach((w, n) => out += ((w, n)))
+      out.toSeq
+    }
+
+  /** [[termCounts]] as a column: an array of (w = `_1`, tf = `_2`)
+    * structs. Tuples, not a case class: a case-class return made
+    * whole-stage codegen fail to compile and fall back per plan.
+    */
+  private val termCountsUdf = udf(termCounts _)
 
   /** The posting table (doc_id, w, tf): word tokens at the corpus's
     * standard whitespace grain (the d10/d12/p31 tokenization — shared so
@@ -57,9 +61,9 @@ object Retrieval {
   private[graft] def postings(d: DataFrame): DataFrame =
     d.select(
       col("doc_id"),
-      explode(termCounts(expr("filter(split(text, ' '), x -> x != '')")))
+      explode(termCountsUdf(expr("filter(split(text, ' '), x -> x != '')")))
         .as("p")
-    ).select(col("doc_id"), col("p.w").as("w"), col("p.tf").as("tf"))
+    ).select(col("doc_id"), col("p._1").as("w"), col("p._2").as("tf"))
 
   /** P33 — tf-idf top-k retrieval through the inverted index: the
     * `nQueries` lowest doc_ids play the query set (their distinct terms
@@ -199,10 +203,26 @@ object Retrieval {
     */
   val IndexBuckets = 16
 
+  /** The members' layouts as the writers below fix them (partition
+    * columns last): a read that declares its schema pays no
+    * schema-inference job.
+    */
+  private[graft] object Layout {
+    import org.apache.spark.sql.types.StructType
+    val documents = StructType.fromDDL("doc_id BIGINT, text STRING")
+    val params = StructType.fromDDL("buckets INT")
+    val stats = StructType.fromDDL("n_docs BIGINT, total_tokens BIGINT, layer BIGINT")
+    val postings = StructType.fromDDL(
+      "doc_id BIGINT, w STRING, tf BIGINT, dl BIGINT, wb BIGINT, layer BIGINT")
+    val df = StructType.fromDDL("w STRING, df BIGINT, wb BIGINT, layer BIGINT")
+    val positions = StructType.fromDDL(
+      "doc_id BIGINT, w STRING, pos BIGINT, wb BIGINT, layer BIGINT")
+  }
+
   private def wbOf(w: Column, buckets: Int): Column =
     pmod(PolyHash.polyHash(w), lit(buckets.toLong))
 
-  private def liveDir(indexDir: String, sub: String): String =
+  private[graft] def liveDir(indexDir: String, sub: String): String =
     graft.util.DirSwap
       .resolve(indexDir, sub)
       .toString
@@ -234,13 +254,13 @@ object Retrieval {
     ).select(
         col("doc_id"),
         size(col("ws")).cast("long").as("dl"),
-        explode(termCounts(col("ws"))).as("p")
+        explode(termCountsUdf(col("ws"))).as("p")
       )
       .select(
         col("doc_id"),
         col("dl"),
-        col("p.w").as("w"),
-        col("p.tf").as("tf")
+        col("p._1").as("w"),
+        col("p._2").as("tf")
       )
 
   /** Builds the persisted inverted index over `corpus` (doc_id, text).
@@ -894,8 +914,7 @@ object Retrieval {
       .select(
         col("qid"),
         col("w"),
-        expr("((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)")
-          .as("idf_ppm")
+        IdfPpm.as("idf_ppm")
       )
 
   /** tf-idf top-k against the STORED index — no index build at query time:
@@ -1665,10 +1684,6 @@ object Retrieval {
   // form.
   // ---------------------------------------------------------------------
 
-  /** The RSJ idf surrogate shared by selection and scoring. */
-  private val IdfPpmExpr =
-    "((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)"
-
   /** Top-`nTerms` informative terms of each query doc by tf·idf_ppm
     * (ties → term order): Lucene MLT's interestingTerms, deterministic.
     * `qtf` is (qid, w, tf); `dfm` (w, df); `stats` one row.
@@ -1687,7 +1702,7 @@ object Retrieval {
       .select(
         col("qid"),
         col("w"),
-        (col("tf") * expr(IdfPpmExpr)).as("sel_ppm")
+        (col("tf") * IdfPpm).as("sel_ppm")
       )
       .withColumn("rn", row_number().over(selW))
       .filter(col("rn") <= nTerms)
@@ -1720,7 +1735,7 @@ object Retrieval {
     val weighted = qterms
       .join(dfm, Seq("w"))
       .crossJoin(broadcast(stats))
-      .select(col("qid"), col("w"), expr(IdfPpmExpr).as("idf_ppm"))
+      .select(col("qid"), col("w"), IdfPpm.as("idf_ppm"))
     val out = bm25Score(tf, weighted, stats, k)
     Eager.materialized(out, tf)
   }
@@ -1751,7 +1766,7 @@ object Retrieval {
     val weighted = qt
       .join(dfm, Seq("w"))
       .crossJoin(broadcast(stats))
-      .select(col("qid"), col("w"), expr(IdfPpmExpr).as("idf_ppm"))
+      .select(col("qid"), col("w"), IdfPpm.as("idf_ppm"))
     bm25Score(post, weighted, stats, k)
   }
 
@@ -1781,7 +1796,7 @@ object Retrieval {
     val weighted = qt
       .join(dfm, Seq("w"))
       .crossJoin(broadcast(stats))
-      .select(col("qid"), col("w"), expr(IdfPpmExpr).as("idf_ppm"))
+      .select(col("qid"), col("w"), IdfPpm.as("idf_ppm"))
     bm25Score(post, weighted, stats, k, excludeSelf)
   }
 
@@ -2304,10 +2319,29 @@ object Retrieval {
   // corpus's scales the straight form is exact and the headroom real.
   // ---------------------------------------------------------------------
 
-  private val Bm25TermPpm: String =
+  /** One posting's BM25 term weight in ppm over `idf_ppm`, `tf`, `dl`,
+    * `n_docs` and `total_tokens` — shared with the stored hybrid search,
+    * which computes it at the scan.
+    */
+  private[graft] val Bm25TermPpm: String =
     "idf_ppm * ((tf * 2200000 * 1000000) DIV (tf * 1000000 + " +
       "(1200000 * (250000 + (750000 * dl * n_docs) DIV total_tokens)) DIV 1000000)) " +
       "DIV 1000000"
+
+  /** idf_ppm, the RSJ surrogate ((2·(N−df)+1)·10⁶) DIV (2·df+1) — one
+    * body for every SQL leg ([[IdfPpm]]) and the stored hybrid search's
+    * fold.
+    */
+  private[graft] def idfPpm(nDocs: Long, df: Long): Long =
+    ((2 * (nDocs - df) + 1) * 1000000L) / (2 * df + 1)
+
+  /** [[idfPpm]] over the `n_docs` and `df` columns. */
+  private val IdfPpm: Column = udf(idfPpm _).apply(col("n_docs"), col("df"))
+
+  /** One leg's RRF contribution in ppm, 10⁶ DIV (rrfK + rank) — the body
+    * [[rrfFuse]] and the stored hybrid search's fold share.
+    */
+  private[graft] def rrfPpm(rrfK: Long, rank: Long): Long = 1000000L / (rrfK + rank)
 
   /** Per-(qid, doc) BM25 scores (no ranking) — shared by the ranked
     * top-k and the phrase query (which ranks only phrase-matching docs).
@@ -2374,8 +2408,7 @@ object Retrieval {
       .select(
         col("qid"),
         col("w"),
-        expr("((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)")
-          .as("idf_ppm")
+        IdfPpm.as("idf_ppm")
       )
     val out = bm25Score(tf, qt, stats, k)
     Eager.materialized(out, tf)
@@ -2496,8 +2529,7 @@ object Retrieval {
       .select(
         col("qid"),
         col("w"),
-        expr("((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)")
-          .as("idf_ppm")
+        IdfPpm.as("idf_ppm")
       )
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id"))
     occ
@@ -2516,7 +2548,11 @@ object Retrieval {
       nQueries: Int,
       phraseLen: Int
   ): DataFrame =
-    positionalPostings(d.filter(col("doc_id") < nQueries))
+    phrasesOf(d.filter(col("doc_id") < nQueries), phraseLen)
+
+  /** Every row's first `phraseLen` tokens as (qid = doc_id, j, w). */
+  private[graft] def phrasesOf(d: DataFrame, phraseLen: Int): DataFrame =
+    positionalPostings(d)
       .filter(col("pos") <= phraseLen)
       .select(col("doc_id").as("qid"), col("pos").as("j"), col("w"))
 
@@ -2798,57 +2834,68 @@ object Retrieval {
     * by a backward suffix-sum DP per p₁ (no enumeration blow-up).
     */
   private def orderedTupleCount(maxJ: Int, window: Int) =
-    udf((js: Seq[Long], ps: Seq[Long]) => {
-      val bySlot =
-        Array.fill(maxJ)(scala.collection.mutable.ArrayBuffer.empty[Long])
-      var i = 0
-      while (i < js.length) {
-        val j = js(i).toInt - 1
-        if (j >= 0 && j < maxJ) bySlot(j) += ps(i)
-        i += 1
-      }
-      if (bySlot.exists(_.isEmpty)) 0L
-      else {
-        val slots = bySlot.map(_.toArray.sorted)
-        var total = 0L
-        slots(0).foreach { p1 =>
-          val bound = p1 + window
-          // ways(j)(q) = completions of slots j+1..M given slot j chose q
-          var ways: Array[Long] = Array.fill(slots(maxJ - 1).length)(1L)
-          var j = maxJ - 2
-          while (j >= 0) {
-            val nxt = slots(j + 1)
-            // suffix sums of ways over nxt positions < bound
-            val cut = {
-              var lo = 0; var hi = nxt.length
-              while (lo < hi) {
-                val mid = (lo + hi) >>> 1
-                if (nxt(mid) < bound) lo = mid + 1 else hi = mid
-              }
-              lo
+    udf((js: Seq[Long], ps: Seq[Long]) => orderedTuples(maxJ, window, js, ps))
+
+  /** The ordered window-tuple count of one (query, doc) group's (slot,
+    * position) pairs — the body of [[orderedTupleCount]], shared with the
+    * stored hybrid search's fold.
+    */
+  private[graft] def orderedTuples(
+      maxJ: Int,
+      window: Int,
+      js: Seq[Long],
+      ps: Seq[Long]
+  ): Long = {
+    val bySlot =
+      Array.fill(maxJ)(scala.collection.mutable.ArrayBuffer.empty[Long])
+    var i = 0
+    while (i < js.length) {
+      val j = js(i).toInt - 1
+      if (j >= 0 && j < maxJ) bySlot(j) += ps(i)
+      i += 1
+    }
+    if (bySlot.exists(_.isEmpty)) 0L
+    else {
+      val slots = bySlot.map(_.toArray.sorted)
+      var total = 0L
+      slots(0).foreach { p1 =>
+        val bound = p1 + window
+        // ways(j)(q) = completions of slots j+1..M given slot j chose q
+        var ways: Array[Long] = Array.fill(slots(maxJ - 1).length)(1L)
+        var j = maxJ - 2
+        while (j >= 0) {
+          val nxt = slots(j + 1)
+          // suffix sums of ways over nxt positions < bound
+          val cut = {
+            var lo = 0; var hi = nxt.length
+            while (lo < hi) {
+              val mid = (lo + hi) >>> 1
+              if (nxt(mid) < bound) lo = mid + 1 else hi = mid
             }
-            val suffix = new Array[Long](cut + 1)
-            var s = cut - 1
-            while (s >= 0) { suffix(s) = suffix(s + 1) + ways(s); s -= 1 }
-            val cur = slots(j)
-            ways = cur.map { q =>
-              // first index in nxt with position > q (strictly)
-              var lo = 0; var hi = cut
-              while (lo < hi) {
-                val mid = (lo + hi) >>> 1
-                if (nxt(mid) <= q) lo = mid + 1 else hi = mid
-              }
-              suffix(lo)
-            }
-            j -= 1
+            lo
           }
-          // slot 1's own position needs no bound check (p1 < p1 + window)
-          val idx = java.util.Arrays.binarySearch(slots(0), p1)
-          total += ways(idx)
+          val suffix = new Array[Long](cut + 1)
+          var s = cut - 1
+          while (s >= 0) { suffix(s) = suffix(s + 1) + ways(s); s -= 1 }
+          val cur = slots(j)
+          ways = cur.map { q =>
+            // first index in nxt with position > q (strictly)
+            var lo = 0; var hi = cut
+            while (lo < hi) {
+              val mid = (lo + hi) >>> 1
+              if (nxt(mid) <= q) lo = mid + 1 else hi = mid
+            }
+            suffix(lo)
+          }
+          j -= 1
         }
-        total
+        // slot 1's own position needs no bound check (p1 < p1 + window)
+        val idx = java.util.Arrays.binarySearch(slots(0), p1)
+        total += ways(idx)
       }
-    })
+      total
+    }
+  }
 
   /** Unordered (p33w/w2 — Indri's #uwN): each slot takes a DISTINCT
     * position of its term, any order, total spread max − min < window;
@@ -2976,8 +3023,7 @@ object Retrieval {
       .select(
         col("qid"),
         col("w"),
-        expr("((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)")
-          .as("idf_ppm")
+        IdfPpm.as("idf_ppm")
       )
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id"))
     occ
@@ -3253,8 +3299,7 @@ object Retrieval {
       .select(
         col("qid"),
         col("w"),
-        expr("((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)")
-          .as("idf_ppm")
+        IdfPpm.as("idf_ppm")
       )
     // ONE pass computes the gate and the scores together: candidates
     // (already seed-pruned, so a stopword's corpus-sized rows died in
@@ -3462,8 +3507,7 @@ object Retrieval {
         col("qid"),
         col("w"),
         col("role"),
-        expr("((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)")
-          .as("idf_ppm")
+        IdfPpm.as("idf_ppm")
       )
     // the one gate-and-score pass (see andRank): nm counts only MUST
     // matches, the score sums MUST ∪ SHOULD matches — same aggregate
@@ -3641,8 +3685,7 @@ object Retrieval {
         col("qid"),
         col("cid"),
         col("w"),
-        expr("((2 * (n_docs - df) + 1) * 1000000) DIV (2 * df + 1)")
-          .as("idf_ppm")
+        IdfPpm.as("idf_ppm")
       )
     val cand = post
       .join(broadcast(weighted), Seq("w"))
@@ -4130,7 +4173,7 @@ object Retrieval {
         _.select(
           col("qid"),
           col("doc_id"),
-          expr(s"1000000 DIV ($rrfK + rank)").as("c")
+          udf(rrfPpm _).apply(lit(rrfK.toLong), col("rank")).as("c")
         )
       )
       .reduce(_.unionByName(_))
@@ -4207,13 +4250,22 @@ object Retrieval {
 
   /** The fused search over EXISTING stores — what a deployed retrieval
     * system runs per query batch: BM25 through the persisted inverted
-    * index ([[bm25TopKIndexed]]), dense cosine through the persisted
-    * exact-integer IVF index
-    * ([[graft.pipeline.Similarity.knnIvfIndexedExact]]), ordered
-    * proximity through the persisted POSITIONAL index
-    * ([[proximityTopKIndexed]]) — every leg's scan partition-pruned to
-    * its probed buckets/cells (plan-asserted in RetrievalIndexSpec),
-    * nothing recomputed inline, fused by the p36c RRF arithmetic.
+    * index, exact-integer IVF cosine through the persisted vector index,
+    * ordered proximity through the persisted POSITIONAL index, fused by
+    * the p36c RRF arithmetic. The queries are the `nQueries` lowest
+    * doc_ids (their text and their embedding codes).
+    *
+    * Runs as ONE keyed pass ([[StoredHybrid]]): two driver collects for
+    * the query side, the stores' params/stats/centroids and the query
+    * terms' df, then every store scan partition-pruned to its probed
+    * buckets/cells (plan-asserted in RetrievalIndexSpec), the BM25 term
+    * weights combined per (query, doc), tagged, unioned and grouped once
+    * on `qid`, and one Scala fold per query — 6 Spark jobs per call.
+    * Row-identical, in `(qid, rank)` order, to the composition of
+    * [[bm25TopKIndexedOf]], [[proximityTopKIndexedOf]],
+    * [[Similarity.knnIvfIndexedExactOf]] and [[rrfFuse]]
+    * (StoredHybridSpec). Every store and corpus read declares its
+    * schema.
     */
   def hybridStoredTopK(
       spark: SparkSession,
@@ -4229,42 +4281,22 @@ object Retrieval {
       nprobe: Int = 2,
       excludeSelf: Boolean = true // threaded to all three legs; false =
       //   the external-query posture (the streaming service's batch twin)
-  ): DataFrame = {
-    // ONE handle for the text store's two legs (round-17, guide §5):
-    // params read once, the probed buckets of BOTH term sets collected in
-    // one job — the superseded form ran per-leg indexViews (2 params
-    // reads + 3 term collects for the bm25/proximity pair). The dense
-    // leg's store is disjoint; its construction (centroid load + probe
-    // collect) still overlaps the text legs via Par (guide §2.6).
-    val d = docs(spark, dir)
-    val qtKw = postings(d.filter(col("doc_id") < nQueries))
-      .select(col("doc_id").as("qid"), col("w"))
-    val phrase = queryPhrases(d, nQueries, phraseLen)
-    val built = graft.util.Par.eval[AnyRef](
-      () => {
-        val v = indexViewsShared(
-          spark, textIndexDir, Seq(qtKw, phrase.select("qid", "w").distinct()))
-        val bm25 = bm25Score(
-          v.post, bm25Weighted(v.qts.head, v.dfm, v.stats), v.stats, poolK, excludeSelf)
-          .select(col("qid"), col("doc_id"), col("rank"))
-        val prox = proximityRank(
-          positionsView(spark, textIndexDir, v.probedWb),
-          v.post, v.dfm, v.stats, phrase, poolK, window, excludeSelf)
-          .select(col("qid"), col("doc_id"), col("rank"))
-        (bm25, prox)
-      },
-      () =>
-        Similarity
-          .knnIvfIndexedExact(
-            spark, dir, vecIndexDir, nQueries, poolK, nprobe, excludeSelf)
-          .select(col("qid"), col("vec_id").as("doc_id"), col("rank"))
+  ): DataFrame =
+    StoredHybrid.search(
+      spark,
+      spark.read
+        .schema(Layout.documents)
+        .parquet(s"$dir/documents.parquet")
+        .filter(col("doc_id") < nQueries),
+      Similarity
+        .quantizedOf(
+          spark.read
+            .schema(Similarity.Layout.embeddings)
+            .parquet(s"$dir/embeddings.parquet")
+            .filter(col("vec_id") < nQueries))
+        .select(col("vec_id").as("qid"), col("q8")),
+      textIndexDir, vecIndexDir, poolK, k, rrfK, phraseLen, window, nprobe, excludeSelf
     )
-    val (bm25, prox) = built(0).asInstanceOf[(DataFrame, DataFrame)]
-    val dense = built(1).asInstanceOf[DataFrame]
-    // leg order unchanged from the superseded form (bm25, dense, prox) —
-    // rrfFuse is order-free but plan parity keeps the evidence diffable
-    rrfFuse(Seq(bm25, dense, prox), rrfK, k)
-  }
 
   /** BM25 against the stored index RESTRICTED to a qualifying doc set —
     * the lexical half of filtered retrieval (Lucene's filter-query

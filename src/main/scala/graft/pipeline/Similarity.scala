@@ -398,14 +398,12 @@ object Similarity {
     * — native twin of `greatest(cellScoresInt(e, centroids))`: a null
     * key loses to any non-null key (struct comparison puts the null
     * field first ascending), ties and the all-null degenerate resolve to
-    * the LOWEST cid.
+    * the LOWEST cid. Returned as `(skey, cid)`.
     */
-  private case class CellBest(skey: Option[Long], cid: Long)
-
   private def bestCellScalar(
       cents: Array[(Long, Array[Long], Long)],
       e: Array[Long]
-  ): CellBest = {
+  ): (Option[Long], Long) = {
     var bestKey: Option[Long] = None
     var bestCid = Long.MaxValue
     var first = true
@@ -425,7 +423,7 @@ object Similarity {
       if (wins) { bestKey = key; bestCid = cid; first = false }
       j += 1
     }
-    CellBest(bestKey, if (first) 0L else bestCid)
+    (bestKey, if (first) 0L else bestCid)
   }
 
   /** Row-local nearest-centroid assignment on integer codes (`q8`) — the
@@ -439,7 +437,7 @@ object Similarity {
       centroids: Seq[(Int, Seq[Long])]
   ): DataFrame = {
     val cents = centArr(centroids)
-    val best = udf((e: Seq[java.lang.Long]) => bestCellScalar(cents, unboxCodes(e)).cid)
+    val best = udf((e: Seq[java.lang.Long]) => bestCellScalar(cents, unboxCodes(e))._2)
     codes.withColumn("cid", best(col("q8")))
   }
 
@@ -462,8 +460,19 @@ object Similarity {
       centroids: Seq[(Int, Seq[Long])],
       nprobe: Int
   ): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val probe = topCells(centroids, nprobe)
+    udf((eIn: Seq[java.lang.Long]) => probe(eIn))
+  }
+
+  /** The body of [[topCellsUdf]] as a plain function (the stored hybrid
+    * search probes its queries on the driver with it).
+    */
+  private[graft] def topCells(
+      centroids: Seq[(Int, Seq[Long])],
+      nprobe: Int
+  ): Seq[java.lang.Long] => Seq[Long] = {
     val cents = centArr(centroids)
-    udf((eIn: Seq[java.lang.Long]) => {
+    (eIn: Seq[java.lang.Long]) => {
       val e = unboxCodes(eIn)
       val keyed: Array[(Option[Long], Long)] =
         cents.map(c => (cellKeyOpt(e, c._2, c._3), c._1))
@@ -481,7 +490,7 @@ object Similarity {
         .take(nprobe)
         .map(_._2)
         .toSeq
-    })
+    }
   }
 
   /** Test hook for the (private) probe-cell walk — OptimizedKernelsSpec
@@ -496,29 +505,35 @@ object Similarity {
     * one-walk twin of `cosKey(dotL(q, v), dotL(v, v))`, the candidate
     * scorer of every exact-integer search (see the kernel note above).
     */
-  private[graft] def cosKeyPair(q: Column, v: Column): Column = {
-    val f = udf((qa: Seq[java.lang.Long], va: Seq[java.lang.Long]) => {
-      val vv = unboxCodes(va)
-      if (vv == null) null // nrm2 null: both when-guards null out
+  private[graft] def cosKeyPair(q: Column, v: Column): Column =
+    cosKeyPairUdf(q, v)
+
+  private val cosKeyPairUdf = udf(cosKey _)
+
+  /** The body of [[cosKeyPair]]: null when the key is null. */
+  private[graft] def cosKey(
+      qa: Seq[java.lang.Long],
+      va: Seq[java.lang.Long]
+  ): java.lang.Long = {
+    val vv = unboxCodes(va)
+    if (vv == null) null // nrm2 null: both when-guards null out
+    else {
+      var nrm2 = 0L
+      var i = 0
+      while (i < vv.length) { nrm2 += vv(i) * vv(i); i += 1 }
+      if (nrm2 == 0L) java.lang.Long.valueOf(0L) // guard precedes the dot
       else {
-        var nrm2 = 0L
-        var i = 0
-        while (i < vv.length) { nrm2 += vv(i) * vv(i); i += 1 }
-        if (nrm2 == 0L) java.lang.Long.valueOf(0L) // guard precedes the dot
+        val qq = unboxCodes(qa)
+        if (qq == null || qq.length != vv.length) null
         else {
-          val qq = unboxCodes(qa)
-          if (qq == null || qq.length != vv.length) null
-          else {
-            var dot = 0L
-            i = 0
-            while (i < vv.length) { dot += qq(i) * vv(i); i += 1 }
-            val mag = (dot * dot * CosKeyScale) / nrm2
-            java.lang.Long.valueOf(if (dot >= 0L) mag else -mag)
-          }
+          var dot = 0L
+          i = 0
+          while (i < vv.length) { dot += qq(i) * vv(i); i += 1 }
+          val mag = (dot * dot * CosKeyScale) / nrm2
+          java.lang.Long.valueOf(if (dot >= 0L) mag else -mag)
         }
       }
-    })
-    f(q, v)
+    }
   }
 
   /** EXACT-INTEGER spherical k-means (Lloyd's) over the int8 codes: same
@@ -585,7 +600,7 @@ object Similarity {
             if (row.isNullAt(0)) null else row.getSeq[java.lang.Long](0)
           if (boxed != null) {
             val e = unboxCodes(boxed) // null if any element is null
-            val j = idxOf(bestCellScalar(cents, e).cid)
+            val j = idxOf(bestCellScalar(cents, e)._2)
             val base = offs(j)
             val lim = math.min(boxed.length, dims(j))
             var i = 0
@@ -677,7 +692,7 @@ object Similarity {
     * remaining quarter plays the appended daily batch and is assigned to
     * those STORED centroids without retraining, and the nprobe search
     * runs over the union — exactly what [[appendToIvfIndex]] +
-    * [[knnIvfIndexedExact]] produce through parquet, but expressed as
+    * [[knnIvfIndexedExactOf]] produce through parquet, but expressed as
     * one plan so the whole lifecycle (training included) hash-replays in
     * DuckDB. Law (IndexStoreSpec): bit-identical to assigning the two
     * batches in separate passes and to the persisted write → append →
@@ -1025,6 +1040,18 @@ object Similarity {
   // — all BIGINT), which is what the stored-leg hybrid (p36d) fuses.
   // ---------------------------------------------------------------------
 
+  /** The exact store's and the corpus's layouts as their writers fix
+    * them (partition columns last): a read that declares its schema pays
+    * no schema-inference job.
+    */
+  private[graft] object Layout {
+    import org.apache.spark.sql.types.StructType
+    val embeddings = StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>")
+    val centroids = StructType.fromDDL("cid INT, c ARRAY<BIGINT>")
+    val vectors = StructType.fromDDL(
+      "vec_id BIGINT, q8 ARRAY<BIGINT>, cid INT, layer BIGINT")
+  }
+
   private def readExactCentroids(
       spark: SparkSession,
       indexDir: String
@@ -1366,29 +1393,6 @@ object Similarity {
     }
   }
 
-  /** [[knnIvfIndexedExactOf]] with the standard query protocol (the
-    * nQueries lowest vec_ids' codes, quantized row-locally from the
-    * corpus — never read back from the index).
-    */
-  def knnIvfIndexedExact(
-      spark: SparkSession,
-      dir: String,
-      indexDir: String,
-      nQueries: Int = 10,
-      k: Int = 5,
-      nprobe: Int = 2,
-      excludeSelf: Boolean = true
-  ): DataFrame =
-    knnIvfIndexedExactOf(
-      spark,
-      quantized(spark, dir).select("vec_id", "q8"),
-      indexDir,
-      nQueries,
-      k,
-      nprobe,
-      excludeSelf
-    )
-
   /** Symmetric int8 quantization of an embedding column: per-vector scale
     * = 127/max|v_i|, code_i = floor(v_i·scale + 0.5) ∈ [−127, 127] (the
     * all-zero vector maps to all-zero codes). This is the storage format
@@ -1421,8 +1425,11 @@ object Similarity {
 
   /** The corpus with its int8 codes (`q8`), max|v| hoisted. */
   private[graft] def quantized(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir)
-      .withColumn("max_abs", maxAbsOf(col("embedding")))
+    quantizedOf(emb(spark, dir))
+
+  /** `e` with the int8 codes (`q8`) of its `embedding` column. */
+  private[graft] def quantizedOf(e: DataFrame): DataFrame =
+    e.withColumn("max_abs", maxAbsOf(col("embedding")))
       .withColumn("q8", quantizeWith(col("embedding"), col("max_abs")))
       .drop("max_abs")
 
@@ -1991,8 +1998,8 @@ object Similarity {
     val best = bestCellUdf(centroids)(col("q8"))
     codes
       .select(
-        best.getField("cid").as("cid"),
-        best.getField("skey").as("skey")
+        best.getField("_2").as("cid"),
+        best.getField("_1").as("skey")
       )
       .groupBy("cid")
       .agg(

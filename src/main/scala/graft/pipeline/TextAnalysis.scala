@@ -983,9 +983,6 @@ object TextAnalysis {
     )
   }
 
-  private case class MergeDel(a: String, b: String, dn: Long)
-  private case class MergeDeltaRes(toks: Seq[String], dels: Seq[MergeDel])
-
   /** Native linear-walk twin of [[mergeDeltaFold]] (round-17, guide §4.2
     * — the same treatment the p32c encode fold got in round 16): the
     * Catalyst aggregate re-copies its accumulator array per token
@@ -1000,13 +997,16 @@ object TextAnalysis {
     * model laws now run against THIS form — the one in production.
     * A stable `val` so every training round plans the identical
     * expression tree (the codegen-cache note on [[mergeDeltaFold]]).
+    * The walk returns tuples (a case-class return makes whole-stage
+    * codegen fail to compile and fall back); [[mergeDeltaWalk]] casts
+    * them to the fold's field names.
     */
-  private[graft] val mergeDeltaWalk =
+  private val mergeDeltaWalkUdf =
     udf((toks: Seq[String], a: String, b: String, m: String) =>
       if (toks == null) null
       else {
         val acc = new scala.collection.mutable.ArrayBuffer[String](toks.length)
-        val dels = scala.collection.mutable.ArrayBuffer.empty[MergeDel]
+        val dels = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
         var po: String = null
         toks.foreach { t =>
           val n = acc.length
@@ -1016,11 +1016,11 @@ object TextAnalysis {
           // and falls to the append branch, exactly as when() does
           val isMerge = n > 0 && l1 == a && t != null && t == b
           if (isMerge) {
-            dels += MergeDel(a, b, -1L)
+            dels += ((a, b, -1L))
             if (n > 1) {
               val l2 = acc(n - 2)
-              dels += MergeDel(l2, a, -1L)
-              dels += MergeDel(l2, m, 1L)
+              dels += ((l2, a, -1L))
+              dels += ((l2, m, 1L))
             }
             acc(n - 1) = m
           } else {
@@ -1028,15 +1028,18 @@ object TextAnalysis {
             // became m ≠ po), so the severed (po, t) pair re-points to
             // (l1, t); po != null implies acc nonempty, so l1 is real
             if (po != null && l1 != po) {
-              dels += MergeDel(l1, t, 1L)
-              dels += MergeDel(po, t, -1L)
+              dels += ((l1, t, 1L))
+              dels += ((po, t, -1L))
             }
             acc += t
           }
           po = t
         }
-        MergeDeltaRes(acc.toSeq, dels.toSeq)
+        (acc.toSeq, dels.toSeq)
       })
+
+  private[graft] def mergeDeltaWalk(toks: Column, a: Column, b: Column, m: Column): Column =
+    mergeDeltaWalkUdf(toks, a, b, m).cast(s"struct<toks:array<string>,dels:$DelsType>")
 
   /** UTF-8 binary string order — how the ENGINES compare strings
     * (Spark's UTF8String and DuckDB's VARCHAR both order by UTF-8

@@ -264,7 +264,11 @@ final case class PipelineDeployment(
       .mediaKnnIvfStored(spark, queryCodes, mediaIndexDir, nQueries, k, nprobe)
 
   /** The p36d batch search over the deployment's stores (corpus query
-    * protocol; the continuous service is [[searchStream]]).
+    * protocol; the continuous service is [[searchStream]]): the
+    * `nQueries` lowest doc_ids of `dir` against the text and vector
+    * stores, as [[graft.pipeline.Retrieval.hybridStoredTopK]]'s one keyed
+    * pass — a lazy frame of `(qid, doc_id, rank, rrf_ppm, n_legs)` in
+    * `(qid, rank)` order that costs 6 Spark jobs to collect.
     */
   def search(
       spark: SparkSession,
@@ -291,10 +295,6 @@ final case class PipelineDeployment(
       checkpointDir,
       k = k
     )(sink)
-
-  /** Familiarity scores against the deployment's maintained LM model. */
-  def lmScore(spark: SparkSession, batch: DataFrame): DataFrame =
-    graft.pipeline.QualityModel.scoreWithLmModel(spark, batch, lmDir)
 
   /** The unified health report (one row per store). */
   def health(spark: SparkSession): DataFrame =

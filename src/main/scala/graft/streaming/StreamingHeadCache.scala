@@ -88,18 +88,63 @@ object StreamingHeadCache {
     )
 
   private def readEntries(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.schema(entriesSchema).parquet(live(storeDir, "entries"))
+    readMember(spark, live(storeDir, "entries"), entriesSchema)
 
   private def readWm(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.schema(wmSchema).parquet(live(storeDir, "wm"))
+    readMember(spark, live(storeDir, "wm"), wmSchema)
 
-  /** Crash repair (pointer validation) — every consumer calls it, the
-    * standard swapped-store posture.
+  /** A member's layers, a committed layer held aside by a [[writeLayer]]
+    * publish ([[hiddenLayers]]) read in place under its own layer number.
     */
-  def repairHeadCache(storeDir: String): Unit = {
-    val root = storeDir
-    Dirs.foreach(graft.util.DirSwap.repair(root, _))
+  private def readMember(
+      spark: SparkSession,
+      member: String,
+      schema: org.apache.spark.sql.types.StructType
+  ): DataFrame =
+    hiddenLayers(member).foldLeft(spark.read.schema(schema).parquet(member)) {
+      case (df, (n, aside)) =>
+        df.unionByName(spark.read.schema(schema).parquet(aside).withColumn("layer", lit(n)))
+    }
+
+  private val LayerName = """^layer=(\d+)$""".r
+  private val AsideName = """^\.layer-(\d+)-old-""".r
+
+  /** One listing of `member`: its `layer=N` numbers and its aside copies
+    * `.layer-N-old-*` as (N, location).
+    */
+  private def layersAndAsides(member: String): (Set[Long], Seq[(Long, String)]) = {
+    val names = graft.util.Blob.children(member).map(c => graft.util.Loc.name(c) -> c)
+    (
+      names.flatMap { case (n, _) => LayerName.findFirstMatchIn(n).map(_.group(1).toLong) }.toSet,
+      names.flatMap { case (n, c) => AsideName.findFirstMatchIn(n).map(_.group(1).toLong -> c) }
+    )
   }
+
+  /** The aside copies whose `layer=N` is absent, one per layer: the
+    * committed copy of a layer whose publish stopped (or is, live)
+    * between [[writeLayer]]'s two renames.
+    */
+  private def hiddenLayers(member: String): Seq[(Long, String)] = {
+    val (present, asides) = layersAndAsides(member)
+    asides.filterNot(a => present(a._1)).sortBy(_._2).distinctBy(_._1)
+  }
+
+  /** Crash repair — every consumer calls it, the standard swapped-store
+    * posture: pointer validation, then the stale half of the
+    * [[writeLayer]] crash window — an aside copy whose `layer=N` is
+    * present (the publish landed, only the delete was lost) is deleted.
+    * Repair never moves a layer back: an aside copy whose `layer=N` is
+    * absent may belong to a live writer between its two renames, so
+    * readers read it in place ([[readMember]]) and only the next write
+    * of that layer (the redelivered batch) moves it back. One listing per
+    * member; no Spark job.
+    */
+  def repairHeadCache(storeDir: String): Unit =
+    Dirs.foreach { sub =>
+      graft.util.DirSwap.repair(storeDir, sub)
+      val (present, asides) = layersAndAsides(live(storeDir, sub))
+      asides.filter(a => present(a._1)).foreach(a => graft.util.Blob.deleteTree(a._2))
+    }
 
   /** Crash-safe per-layer write: the frame is FULLY written to a hidden
     * staging directory (Spark's file index skips dot-prefixed entries),
@@ -107,7 +152,9 @@ object StreamingHeadCache {
     * the current `layer=N` (a redelivered batch's earlier write) is
     * renamed aside, staging is moved into place, and only then is the
     * aside copy deleted. A failed move puts the aside copy back, so a
-    * failed publish leaves the prior layer readable. A crash mid-WRITE
+    * failed publish leaves the prior layer readable; readers read an
+    * aside copy in place while `layer=N` is absent, and a crash between
+    * the renames is undone by the next write of the layer. A crash mid-WRITE
     * leaves the committed layer untouched; orphaned staging dirs are
     * invisible to readers and ignored thereafter. `publish` is the
     * staging → target move (a seam for the failed-publish spec).
@@ -124,6 +171,10 @@ object StreamingHeadCache {
     val staging = graft.util.Loc.join(memberDir, s".layer-$layer-staging-$run")
     df.write.mode("overwrite").parquet(staging)
     val target = graft.util.Loc.join(memberDir, s"layer=$layer")
+    // an earlier publish of this layer stopped between its two renames:
+    // its committed copy goes back first, so a failed publish below
+    // still leaves it readable
+    hiddenLayers(memberDir).find(_._1 == layer).foreach(h => graft.util.Blob.move(h._2, target))
     val aside = graft.util.Loc.join(memberDir, s".layer-$layer-old-$run")
     val hadOld = graft.util.Blob.exists(target) && graft.util.Blob.move(target, aside)
     def restore(): Unit = if (hadOld) { graft.util.Blob.move(aside, target); () }

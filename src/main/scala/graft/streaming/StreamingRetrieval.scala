@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -418,7 +418,10 @@ object StreamingRetrieval {
     * persisted inverted index, exact-integer IVF cosine through the
     * persisted vector index (the query codes quantized ROW-LOCALLY with
     * the corpus arithmetic), ordered proximity through the positional
-    * payload — fused by the shared RRF tail. Every leg's store scan is
+    * payload — fused by the shared RRF tail. Unfiltered, a micro-batch
+    * is the batch search's one keyed pass ([[graft.pipeline.StoredHybrid]])
+    * over every arriving query, without self-exclusion; under `allowed`
+    * it composes the filtered legs (the p36f form). Every store scan is
     * partition-pruned to the batch's probed buckets/cells, so per-batch
     * cost follows the batch's terms/cells, never the index. Stateless
     * like [[searchStream]]: queries are independent rows and the stores
@@ -466,75 +469,84 @@ object StreamingRetrieval {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
-        val terms = batch
-          .select(
-            col("qid"),
-            explode(expr("filter(split(text, ' '), x -> x != '')")).as("w")
+        // arriving qids are external, unrelated to corpus doc_ids: no leg
+        // applies the corpus protocol's self-exclusion
+        val result = allowed.fold(
+          // the batch search's one keyed pass, over every arriving query
+          graft.pipeline.StoredHybrid.search(
+            sp,
+            batch.select(col("qid").as("doc_id"), col("text")),
+            batch.select(
+              col("qid"),
+              graft.pipeline.Similarity.quantize(col("embedding")).as("q8")),
+            textIndexDir, vecIndexDir, poolK, k, rrfK, phraseLen, window, nprobe,
+            excludeSelf = false
           )
-          .distinct()
-        // every leg runs WITHOUT the corpus protocol's self-exclusion:
-        // arriving qids are external, unrelated to corpus doc_ids
-        val lex = allowed
-          .fold(
-            Retrieval.bm25TopKIndexedOf(
-              sp, terms, textIndexDir, poolK, excludeSelf = false)
-          )(a =>
-            Retrieval.bm25TopKIndexedFilteredOf(
-              sp, terms, textIndexDir, a, poolK, excludeSelf = false)
-          )
-          .select(col("qid"), col("doc_id"), col("rank"))
-        val phrase = batch
-          .select(
-            col("qid"),
-            posexplode(expr("filter(split(text, ' '), x -> x != '')"))
-              .as(Seq("pos0", "w"))
-          )
-          .filter(col("pos0") < phraseLen)
-          .select(col("qid"), (col("pos0") + 1L).cast("long").as("j"), col("w"))
-        val prox = allowed
-          .fold(
-            Retrieval.proximityTopKIndexedOf(
-              sp, phrase, textIndexDir, poolK, window, excludeSelf = false)
-          )(a =>
-            Retrieval.proximityTopKIndexedFilteredOf(
-              sp, phrase, textIndexDir, a, poolK, window, excludeSelf = false)
-          )
-          .select(col("qid"), col("doc_id"), col("rank"))
-        val codes = batch.select(
-          col("qid").as("vec_id"),
-          graft.pipeline.Similarity.quantize(col("embedding")).as("q8")
-        )
-        val dense = allowed
-          .fold(
-            graft.pipeline.Similarity.knnIvfIndexedExactOf(
-              sp,
-              codes,
-              vecIndexDir,
-              nQueries = Long.MaxValue, // every arriving query
-              k = poolK,
-              nprobe = nprobe,
-              excludeSelf = false
-            )
-          )(a => {
-            val filteredSearch =
-              if (adaptiveNprobe)
-                graft.pipeline.Similarity.knnIvfIndexedExactFilteredAdaptiveOf _
-              else graft.pipeline.Similarity.knnIvfIndexedExactFilteredOf _
-            filteredSearch(
-              sp,
-              codes,
-              vecIndexDir,
-              a.select(col("doc_id").as("vec_id")),
-              Long.MaxValue, // every arriving query
-              poolK,
-              nprobe,
-              false // external qid space — no corpus self-exclusion
-            )
-          })
-          .select(col("qid"), col("vec_id").as("doc_id"), col("rank"))
-        sink(Retrieval.rrfFuse(Seq(lex, dense, prox), rrfK, k), batchId)
+        )(filteredSearch(sp, batch, textIndexDir, vecIndexDir, _, poolK, k, rrfK,
+          phraseLen, window, nprobe, adaptiveNprobe))
+        sink(result, batchId)
       }
       .start()
+
+  /** One micro-batch of [[hybridSearchStream]] under a tenant filter:
+    * the p36f composition of the filtered legs, external-qid posture.
+    */
+  private def filteredSearch(
+      sp: SparkSession,
+      batch: DataFrame,
+      textIndexDir: String,
+      vecIndexDir: String,
+      allowed: DataFrame,
+      poolK: Int,
+      k: Int,
+      rrfK: Int,
+      phraseLen: Int,
+      window: Int,
+      nprobe: Int,
+      adaptiveNprobe: Boolean
+  ): DataFrame = {
+    val terms = batch
+      .select(
+        col("qid"),
+        explode(expr("filter(split(text, ' '), x -> x != '')")).as("w")
+      )
+      .distinct()
+    val lex = Retrieval
+      .bm25TopKIndexedFilteredOf(
+        sp, terms, textIndexDir, allowed, poolK, excludeSelf = false)
+      .select(col("qid"), col("doc_id"), col("rank"))
+    val phrase = batch
+      .select(
+        col("qid"),
+        posexplode(expr("filter(split(text, ' '), x -> x != '')"))
+          .as(Seq("pos0", "w"))
+      )
+      .filter(col("pos0") < phraseLen)
+      .select(col("qid"), (col("pos0") + 1L).cast("long").as("j"), col("w"))
+    val prox = Retrieval
+      .proximityTopKIndexedFilteredOf(
+        sp, phrase, textIndexDir, allowed, poolK, window, excludeSelf = false)
+      .select(col("qid"), col("doc_id"), col("rank"))
+    val codes = batch.select(
+      col("qid").as("vec_id"),
+      graft.pipeline.Similarity.quantize(col("embedding")).as("q8")
+    )
+    val denseSearch =
+      if (adaptiveNprobe)
+        graft.pipeline.Similarity.knnIvfIndexedExactFilteredAdaptiveOf _
+      else graft.pipeline.Similarity.knnIvfIndexedExactFilteredOf _
+    val dense = denseSearch(
+      sp,
+      codes,
+      vecIndexDir,
+      allowed.select(col("doc_id").as("vec_id")),
+      Long.MaxValue, // every arriving query
+      poolK,
+      nprobe,
+      false // external qid space — no corpus self-exclusion
+    ).select(col("qid"), col("vec_id").as("doc_id"), col("rank"))
+    Retrieval.rrfFuse(Seq(lex, dense, prox), rrfK, k)
+  }
 
   /** Continuous index INGEST — the write side of the retrieval plane's
     * streaming lifecycle (the ANN plane's `maintenanceStream` analogue):

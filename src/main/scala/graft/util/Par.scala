@@ -114,8 +114,6 @@ private[graft] object Par {
       // exception, keep everything else suppressed
       import scala.jdk.CollectionConverters._
       val all = failures.asScala.toSeq
-      def isCancelArtifact(t: Throwable): Boolean =
-        Option(t.getMessage).exists(_.toLowerCase.contains("cancel"))
       val first = all.find(!isCancelArtifact(_)).getOrElse(all.head)
       all.filter(_ ne first).foreach(first.addSuppressed)
       throw first
@@ -125,6 +123,26 @@ private[graft] object Par {
         "Par.run interrupted; sibling Spark jobs cancelled, all workers joined"
       )
   }
+
+  /** Whether `t` is a side effect of the group cancel or of an interrupt
+    * rather than a root cause, judged by type along the cause chain: a
+    * Spark job cancelled (error condition `SPARK_JOB_CANCELLED`), an
+    * `InterruptedException` or a `CancellationException`. The message
+    * text is never consulted, so a real failure whose message merely
+    * mentions cancelling stays primary.
+    */
+  private def isCancelArtifact(t: Throwable): Boolean =
+    Iterator
+      .iterate(t)(_.getCause)
+      .takeWhile(_ != null)
+      .take(16) // a cyclic cause chain must not spin
+      .exists {
+        case s: org.apache.spark.SparkThrowable =>
+          s.getCondition == "SPARK_JOB_CANCELLED"
+        case _: InterruptedException                        => true
+        case _: java.util.concurrent.CancellationException => true
+        case _                                               => false
+      }
 
   /** [[run]] over an optional task list — `Some(thunk)` runs, `None` is
     * skipped (the opt-in store members' natural shape).

@@ -329,4 +329,69 @@ class HeadCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!graft.util.Blob.children(entries).exists(graft.util.Loc.name(_).contains("-old-")))
     a.unpersist(false)
   }
+
+  test("a layer a crash left renamed aside stays readable until its next write puts it back") {
+    val a = actions.cache()
+    val storeDir = Files.createTempDirectory("graft-head-crash").toString
+    val wm = JournalOps.defaultWatermark(a)
+    StreamingHeadCache.appendBatch(spark, a, storeDir, wm, layer = 1L)
+    val before = rows(storeDir)
+    assert(before.nonEmpty)
+    val entries = graft.util.DirSwap.resolve(storeDir, "entries").toString
+    val target = graft.util.Loc.join(entries, "layer=1")
+    def asides = graft.util.Blob.children(entries).filter(graft.util.Loc.name(_).contains("-old-"))
+    // a redelivery whose process stops right after writeLayer's first
+    // rename: the committed layer=1 sits aside and no layer=1 exists
+    assert(graft.util.Blob.move(target, graft.util.Loc.join(entries, ".layer-1-old-crashed")))
+    assert(rows(storeDir) == before, "readers read the aside copy in place")
+    StreamingHeadCache.repairHeadCache(storeDir)
+    assert(asides.size == 1 && !graft.util.Blob.exists(target), "repair moves no layer")
+    assert(rows(storeDir) == before)
+    // the next write of the layer puts the copy back before its own
+    // publish, so a refused publish still leaves it in place
+    val other = StreamingHeadCache.partialFolds(spark, a.filter(col("koffset") < 5))
+    intercept[IllegalStateException] {
+      StreamingHeadCache.writeLayer(other, entries, 1L, publish = (_, _) => false)
+    }
+    assert(graft.util.Blob.exists(target) && asides.isEmpty)
+    assert(rows(storeDir) == before)
+    // a stop after the move but before the delete: layer=1 is the new
+    // copy, the aside copy is stale — never read, and repair drops it
+    StreamingHeadCache.writeLayer(other, entries, 1L)
+    val after = rows(storeDir)
+    assert(after != before)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(entries, ".layer-1-old-stale"))
+    assert(rows(storeDir) == after, "a present layer wins over a stale aside copy")
+    StreamingHeadCache.repairHeadCache(storeDir)
+    assert(asides.isEmpty)
+    a.unpersist(false)
+  }
+
+  test("readers and repair inside a live publish's window fail nothing") {
+    val a = actions.cache()
+    val wm = JournalOps.defaultWatermark(a)
+    val other = StreamingHeadCache.partialFolds(spark, a.filter(col("koffset") < 5))
+    def store() = {
+      val dir = Files.createTempDirectory("graft-head-live").toString
+      StreamingHeadCache.appendBatch(spark, a, dir, wm, layer = 1L)
+      dir -> graft.util.DirSwap.resolve(dir, "entries").toString
+    }
+    val (plain, plainEntries) = store()
+    StreamingHeadCache.writeLayer(other, plainEntries, 1L)
+    val want = rows(plain)
+    val (storeDir, entries) = store()
+    val before = rows(storeDir)
+    var mid = Seq.empty[String]
+    // between the first rename and the publish: a reader repairs and
+    // reads, then the publish goes ahead
+    StreamingHeadCache.writeLayer(other, entries, 1L, publish = (staging, target) => {
+      StreamingHeadCache.repairHeadCache(storeDir)
+      mid = rows(storeDir)
+      graft.util.Blob.move(staging, target)
+    })
+    assert(mid == before, "the reader saw the committed layer")
+    assert(rows(storeDir) == want, "the writer published")
+    assert(!graft.util.Blob.children(entries).exists(graft.util.Loc.name(_).contains("-old-")))
+    a.unpersist(false)
+  }
 }

@@ -359,7 +359,7 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq
-    val stored = Similarity.knnIvfIndexedExact(spark, sfDir, tmp)
+    val stored = Similarity.knnIvfIndexedExactOf(spark, codes, tmp)
     // the store scan is partition-pruned to the probed cells
     val plan = stored.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"))
@@ -375,7 +375,7 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head()
       .getAs[Boolean]("compacted")
     assert(fired)
-    assert(rows4(Similarity.knnIvfIndexedExact(spark, sfDir, tmp)) == direct)
+    assert(rows4(Similarity.knnIvfIndexedExactOf(spark, codes, tmp)) == direct)
   }
 
   test("k15 filtered search: exact pre-filter semantics — equals the unfiltered ranking restricted to the allowed set") {

@@ -155,6 +155,29 @@ class OptimizedKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage === "boom")
   }
 
+  test("Par.run picks the primary failure by type: a root cause that mentions cancelling still wins") {
+    // the sibling's cancelled Spark job reaches the queue first; its
+    // message and the root cause's both contain "cancel"
+    val cancelled = new org.apache.spark.SparkException(
+      "SPARK_JOB_CANCELLED", Map("jobId" -> "7", "reason" -> "part of cancelled job group"), null)
+    assert(cancelled.getMessage.toLowerCase.contains("cancel"))
+    Seq[Throwable](
+      cancelled,
+      new InterruptedException("sibling interrupted"),
+      new java.util.concurrent.CancellationException("sibling cancelled"),
+      new RuntimeException("wrapped", cancelled)
+    ).foreach { artifact =>
+      val e = intercept[IllegalStateException] {
+        graft.util.Par.run(
+          () => throw artifact,
+          () => { Thread.sleep(200); throw new IllegalStateException("cannot cancel lease: disk full") }
+        )
+      }
+      assert(e.getMessage === "cannot cancel lease: disk full", artifact.toString)
+      assert(e.getSuppressed.toSeq === Seq(artifact))
+    }
+  }
+
   test("Par.run joins uninterruptibly and re-raises the interrupt after all workers exit") {
     // round-17 abort posture: an interrupt of the calling thread must NOT
     // let control return while a worker is still running (that race let
