@@ -152,28 +152,34 @@ object JournalOps {
         // record_id rotates when the journal is purged and re-created (the
         // reference's RecordId.scala:19-31 orphan-detection key): it is a
         // pure function of the head's first surviving offset
-        md5(
-          concat(col("topic"), lit("|"), col("id"), lit("|"),
-            col("first_koffset").cast("string"))
-        ).as("record_id"),
+        recordId(col("topic"), col("id"), col("first_koffset")).as("record_id"),
         col("_or.v").as("origin"),
         col("_pr.k").as("last_append_koffset"),
         col("_pr.v").as("properties"),
-        // anchored to the expireAfter FIELD — a bare digit-run match would
-        // invent a TTL from any other numeric metadata content
-        nullif(
-          regexp_extract(col("_pr.v"), "\"expireAfter\":\"([0-9]+)", 1),
-          lit("")
-        ).cast("int").as("expire_after_days"),
-        date_add(
-          to_date(col("_lt.v")),
-          nullif(
-            regexp_extract(col("_pr.v"), "\"expireAfter\":\"([0-9]+)", 1),
-            lit("")
-          ).cast("int")
-        ).as("expire_on")
+        expireAfterDays(col("_pr.v")).as("expire_after_days"),
+        expireOn(col("_lt.v"), col("_pr.v")).as("expire_on")
       ) // unordered: callers in the merge path must not pay a sort; the
         // query surface adds ORDER BY explicitly
+
+  /** A head's `record_id`: a pure function of its first surviving offset,
+    * so it rotates when the journal is purged and re-created.
+    */
+  def recordId(topic: Column, id: Column, firstKoffset: Column): Column =
+    md5(concat(topic, lit("|"), id, lit("|"), firstKoffset.cast("string")))
+
+  /** The TTL in days a last append's metadata sets — anchored to the
+    * expireAfter FIELD: a bare digit-run match would invent a TTL from any
+    * other numeric metadata content.
+    */
+  def expireAfterDays(metadata: Column): Column =
+    nullif(
+      regexp_extract(metadata, "\"expireAfter\":\"([0-9]+)", 1),
+      lit("")
+    ).cast("int")
+
+  /** The expiry date: the TTL counted from the last append's own `ts`. */
+  def expireOn(lastAppendTs: Column, metadata: Column): Column =
+    date_add(to_date(lastAppendTs), expireAfterDays(metadata))
 
   /** S9/A4 — pointer2: replicated high-watermark per (topic, partition) —
     * max offset + 1, i.e. the next offset the replicator would consume

@@ -37,6 +37,30 @@ object Replicate {
     abs(graft.functions.JavaStringHash.javaHash(lower(id)).cast("long") % n)
       .cast("int")
 
+  /** The replicated store's tables as [[graft.streaming.StreamingReplicator]]
+    * writes them, in the column order a schema-inferring read yields
+    * (partition columns last): a read that declares them pays no
+    * schema-inference job. `journal` and `metajournal` are partitioned by
+    * `(topic, bucket)`; `pointer2` is one row per Kafka partition.
+    */
+  object Layout {
+    import org.apache.spark.sql.types.StructType
+    val journal: StructType = StructType.fromDDL(
+      "part_no INT, id STRING, seq_nr BIGINT, koffset BIGINT, ts TIMESTAMP, " +
+        "payload DOUBLE, payload_type STRING, payload_txt STRING, " +
+        "payload_bin BINARY, tags ARRAY<STRING>, origin STRING, " +
+        "version STRING, metadata STRING, meta_record_id STRING, " +
+        "topic STRING, bucket INT")
+    val metajournal: StructType = StructType.fromDDL(
+      "id STRING, part_no INT, koffset BIGINT, seq_nr BIGINT, " +
+        "delete_to BIGINT, created TIMESTAMP, created_date DATE, " +
+        "updated TIMESTAMP, first_koffset BIGINT, record_id STRING, " +
+        "origin STRING, last_append_koffset BIGINT, properties STRING, " +
+        "expire_after_days INT, expire_on DATE, topic STRING, bucket INT")
+    val pointer2: StructType = StructType.fromDDL(
+      "topic STRING, part_no INT, next_offset BIGINT, records BIGINT")
+  }
+
   /** The journal-table projection of surviving appends: the reference's
     * event-row schema (JournalStatements.scala:32-53) — dual-column typed
     * payload, tags as a real ARRAY (SET<TEXT>), origin/version/metadata
@@ -223,10 +247,8 @@ object Replicate {
         coalesce(col("e_cd"), col("b_cd")).as("created_date"),
         greatest(col("e_upd"), col("b_upd")).as("updated"),
         least(col("e_first"), col("b_first")).as("first_koffset"),
-        md5(
-          concat(col("topic"), lit("|"), col("id"), lit("|"),
-            least(col("e_first"), col("b_first")).cast("string"))
-        ).as("record_id"),
+        JournalOps.recordId(col("topic"), col("id"),
+          least(col("e_first"), col("b_first"))).as("record_id"),
         when(col("e_first").isNull, col("b_origin"))
           .when(col("b_first").isNull, col("e_origin"))
           .when(col("e_first") <= col("b_first"), col("e_origin"))

@@ -78,6 +78,7 @@ final case class Deployment(
     if (epoch == 0L) Seq.empty[(String, Int, Long)].toDF("topic", "part_no", "wm")
     else
       spark.read
+        .schema(graft.journal.Replicate.Layout.pointer2)
         .parquet(graft.util.Loc.join(cur, "pointer2"))
         .select(col("topic"), col("part_no"), (col("next_offset") - 1L).as("wm"))
   }

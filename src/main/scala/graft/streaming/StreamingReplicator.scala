@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.journal.Replicate
+import graft.journal.{Replicate, ReplicateFold}
 import graft.util.{Blob, Loc}
 
 /** The replicator as a Structured Streaming job (reference
@@ -16,8 +16,11 @@ import graft.util.{Blob, Loc}
   * in `readStream.format("kafka")` changes ONLY [[streamFrom]] — the merge
   * body is source-agnostic. Sink: `(topic, bucket)`-partitioned parquet
   * journal AND metajournal mutated INCREMENTALLY (only the batch's touched
-  * partitions are read and rewritten — O(batch), not O(store)) plus the
-  * tiny pointer2 table behind an atomic generation swap; on Delta/Iceberg
+  * partitions are read and rewritten — O(touched partitions), which is
+  * O(store) once a batch spreads over every bucket: a 1000-action Zipf
+  * chunk over 300 journals touches all 65 partitions the store holds, and
+  * one new one) plus
+  * the tiny pointer2 table behind an atomic generation swap; on Delta/Iceberg
   * the same logical plan is a transactional MERGE INTO (the 100 TB
   * deployment shape — documented as SURVEY §7.4 risk 1).
   *
@@ -28,8 +31,17 @@ import graft.util.{Blob, Loc}
   */
 object StreamingReplicator {
 
-  /** Applies one micro-batch to the store — O(batch), not O(store). Also
+  /** Applies one micro-batch to the store — O(touched partitions). Also
     * the test seam: batches can be fed directly.
+    *
+    * Shape: one collect over the cached batch yields its touched
+    * partitions and per-partition offsets (after the pointer2 offset
+    * guard); the touched partitions' stored rows, read under their
+    * declared [[Replicate.Layout]], and the batch are folded in ONE keyed
+    * pass ([[ReplicateFold]]), checkpointed once and written as one data
+    * file per touched partition per table; pointer2 is merged on the
+    * driver and committed as a local relation. About 7 Spark jobs per
+    * batch.
     *
     * Layout: the journal AND the metajournal live at `storeDir/journal` /
     * `storeDir/metajournal`, both partitioned by `(topic, bucket)`
@@ -38,8 +50,9 @@ object StreamingReplicator {
     * partitions of the journals it touches (partition pruning on the
     * collected touched set) and rewrites ONLY those via dynamic partition
     * overwrite — untouched partition files are never opened or rewritten,
-    * so per-batch cost scales with the batch's key locality, not the
-    * accumulated store. At 10⁸–10⁹ journals the metajournal is itself a
+    * so per-batch cost scales with the number of partitions the batch
+    * touches, which is the whole store when its keys spread over every
+    * bucket. At 10⁸–10⁹ journals the metajournal is itself a
     * large table (the reference upserts exactly the touched keys,
     * ReplicatedCassandra.scala:186-260); bucketing bounds each batch's
     * head rewrite to the touched buckets' heads — the bucket count
@@ -106,20 +119,18 @@ object StreamingReplicator {
       leaseMs: Long = DefaultLeaseMs,
       protocol: StoreCommitProtocol = FsCommitProtocol
   ): Unit = {
-    import org.apache.spark.sql.functions.col
     val (cur, epoch) = protocol.resolveCurrent(storeDir)
     val root = storeDir
     Blob.mkdirs(root)
     val claimToken = protocol.claimEpoch(root, epoch + 1, leaseMs)
-    val journalDir = Loc.join(storeDir, "journal")
-    val metaDir = Loc.join(storeDir, "metajournal")
     val batchC = batch.cache()
-    // lease heartbeat for the WHOLE batch — the long phases are the two
-    // overwrite jobs and the commit, which a single pre-write renewal
-    // would not cover: a healthy-but-slow writer would read as dead at
-    // leaseMs and two contending slow writers would break each other
-    // forever. A renewal failure means the lease was already broken; the
-    // next verifyClaim fences the mutation, so the heartbeat only stops.
+    // lease heartbeat for the WHOLE batch — the long phases are the fold,
+    // the two overwrite jobs and the commit, which a single pre-write
+    // renewal would not cover: a healthy-but-slow writer would read as
+    // dead at leaseMs and two contending slow writers would break each
+    // other forever. A renewal failure means the lease was already
+    // broken; the next verifyClaim fences the mutation, so the heartbeat
+    // only stops.
     val heartbeat = new java.util.concurrent.ScheduledThreadPoolExecutor(
       1,
       (r: Runnable) => {
@@ -135,41 +146,52 @@ object StreamingReplicator {
       java.util.concurrent.TimeUnit.MILLISECONDS
     )
     try {
-      val touched = batchC
-        .select(col("topic"), Replicate.bucketOf(col("id")).as("bucket"))
-        .distinct()
-        .collect()
-        .map(r => (r.getString(0), r.getInt(1)))
+      val storedP2 =
+        if (Blob.exists(cur))
+          spark.read.schema(Replicate.Layout.pointer2)
+            .parquet(Loc.join(cur, "pointer2")).collect().toSeq
+        else Seq.empty
+      val next = ReplicateFold.nextOffsets(storedP2)
+      val touched = ReplicateFold.touches(batchC, next)
       if (touched.isEmpty) {
         protocol.releaseClaim(root, epoch + 1, claimToken)
         return
       }
+      // only partitions the guard admitted rows into change; a wholly
+      // redelivered batch rewrites nothing and commits pointer2 as it was
+      val parts = touched.filter(_.rows > 0).map(t => (t.topic, t.bucket)).distinct
+      if (parts.nonEmpty) {
+        // each table with its touched partitions' data files before the write
+        val tables = Seq(
+          Table(Loc.join(storeDir, "journal"), Replicate.Layout.journal, ReplicateFold.journalOf),
+          Table(Loc.join(storeDir, "metajournal"), Replicate.Layout.metajournal, ReplicateFold.metajournalOf)
+        ).map(t => t -> parts.map(p => p -> dataFiles(partDir(t.dir, p))).toMap)
+        val Seq(journal, metajournal) = tables.map { case (t, files) =>
+          scan(spark, t.dir, t.layout, parts.flatMap(files))
+        }
+        val slots = math.max(1, math.min(spark.sparkContext.defaultParallelism, parts.size))
+        val folded = ReplicateFold.fold(journal, metajournal, batchC, next, slots)
+          .localCheckpoint(true)
+        try tables.foreach { case (t, files) =>
+          // ownership fence before EACH shared-table mutation: a writer
+          // whose lease was broken anyway (heartbeat lost the race, or the
+          // process stalled long enough for renewals to stop) fails here,
+          // before clobbering the breaker's bucket files
+          protocol.verifyClaim(root, epoch + 1, claimToken)
+          overwriteTouched(t.dir, t.of(folded), parts, files)
+        }
+        // checkpoint blocks die with the batch, not with a later GC cycle
+        // (Dataset.unpersist is a no-op for checkpointed frames)
+        finally graft.pipeline.Eager.releaseCheckpoint(folded)
+      }
 
-      val bootstrap = Replicate.empty(spark, batchC)
-      val store = Replicate.Store(
-        journal = readTouched(spark, journalDir, touched, bootstrap.journal),
-        metajournal = readTouched(spark, metaDir, touched, bootstrap.metajournal),
-        pointer2 =
-          if (Blob.exists(cur))
-            spark.read.parquet(Loc.join(cur, "pointer2"))
-          else bootstrap.pointer2
-      )
-
-      val merged = Replicate.mergeBatch(store, batchC)
-
-      // ownership fence before EACH shared-table mutation: a writer whose
-      // lease was broken anyway (heartbeat lost the race, or the process
-      // stalled long enough for renewals to stop) fails here, before
-      // clobbering the breaker's bucket files
       protocol.verifyClaim(root, epoch + 1, claimToken)
-      overwriteTouched(merged.journal, journalDir,
-        Loc.join(storeDir, "journal_schema.json"), touched)
-      protocol.verifyClaim(root, epoch + 1, claimToken)
-      overwriteTouched(merged.metajournal, metaDir,
-        Loc.join(storeDir, "metajournal_schema.json"), touched)
-
-      protocol.verifyClaim(root, epoch + 1, claimToken)
-      protocol.commitGeneration(root, epoch, merged.pointer2, claimToken)
+      protocol.commitGeneration(root, epoch,
+        spark.createDataFrame(
+          java.util.Arrays.asList(ReplicateFold.pointer2(storedP2, touched): _*),
+          Replicate.Layout.pointer2
+        ).coalesce(1),
+        claimToken)
     } catch {
       // a failure BEFORE the commit leaves the claim held; release it so a
       // peer need not wait out the lease (crash = lease expiry handles it).
@@ -405,136 +427,73 @@ object StreamingReplicator {
         .foreach(Blob.deleteIfExists)
   }
 
-  /** Touched-partition subset of a `(topic, bucket)`-partitioned table —
-    * partition pruning on the collected touched set; the `bucket` column
-    * is physical layout only and dropped from the logical rows. Guards on
-    * actual parquet content, not directory existence: after a purge
-    * empties EVERY bucket only _SUCCESS remains and a bare read would
-    * fail schema inference, wedging the stream.
+  /** One bucketed table: its directory, its declared layout and how to
+    * read its rows off a folded frame.
     */
-  private def readTouched(
-      spark: SparkSession,
+  private final case class Table(
       dir: String,
-      touched: Array[(String, Int)],
-      bootstrap: DataFrame
-  ): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    if (Blob.hasParquet(dir)) {
-      val pred = touched
-        .map { case (t, b) => col("topic") === t && col("bucket") === b }
-        .reduce(_ || _)
-      spark.read.parquet(dir).filter(pred).drop("bucket")
-    } else bootstrap
+      layout: org.apache.spark.sql.types.StructType,
+      of: DataFrame => DataFrame
+  )
+
+  private def partDir(dir: String, p: (String, Int)): String = {
+    val escape = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
+    Loc.join(Loc.join(dir, s"topic=${escape(p._1)}"), s"bucket=${p._2}")
   }
 
-  /** Replaces ONLY the touched `(topic, bucket)` partitions of a table
-    * with the merged rows. Materializes first (localCheckpoint) — the
-    * merged plan reads from `dir` and Spark refuses to overwrite a path
-    * it is reading from. The schema sidecar lets [[readStore]] serve an
-    * empty table when every partition has been purged away (no parquet
-    * files left to infer from).
+  /** The data files Spark reads in one partition directory. */
+  private def dataFiles(part: String): Seq[String] =
+    Blob.children(part).filter { f =>
+      val n = Loc.name(f)
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** The rows of `files` (data files of `dir`'s partitions) under the
+    * declared `layout`: no schema-inference job, and no listing job —
+    * each read names at most the partition-discovery threshold of paths,
+    * which Spark lists on the driver.
+    */
+  private def scan(
+      spark: SparkSession,
+      dir: String,
+      layout: org.apache.spark.sql.types.StructType,
+      files: Seq[String]
+  ): DataFrame = {
+    val perRead = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), layout)
+    else
+      files
+        .grouped(math.max(1, perRead))
+        .map(g => spark.read.schema(layout).option("basePath", dir).parquet(g: _*))
+        .reduce(_.unionByName(_))
+  }
+
+  /** Replaces ONLY the touched `(topic, bucket)` partitions of the table
+    * at `dir` with their rows in `rows` (dynamic partition overwrite;
+    * every partition sits in one task of the folded frame, so it gets one
+    * file). `before` holds each partition's data files before the write.
     */
   private def overwriteTouched(
-      merged: DataFrame,
       dir: String,
-      schemaPath: String,
-      touched: Array[(String, Int)]
+      rows: DataFrame,
+      parts: Seq[(String, Int)],
+      before: Map[(String, Int), Seq[String]]
   ): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (!Blob.exists(schemaPath))
-      Blob.writeBytes(schemaPath, merged.schema.json.getBytes("UTF-8"))
-    val m = merged
-      .withColumn("bucket", Replicate.bucketOf(col("id")))
-      .localCheckpoint(true)
-    m.write
+    rows.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("topic", "bucket")
       .parquet(dir)
     // dynamic overwrite cannot emit an EMPTY partition: a touched
-    // partition whose journals were all purged keeps its stale dir —
-    // drop those explicitly (re-running after a crash converges: the
-    // redelivered purge deletes again)
-    val nonEmpty = m
-      .select("topic", "bucket").distinct().collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    touched.filterNot(nonEmpty).foreach { case (t, b) =>
-      val part = Loc.join(Loc.join(dir, s"topic=$t"), s"bucket=$b")
-      if (Blob.exists(part)) Blob.deleteTree(part)
+    // partition whose journals were all purged keeps its stale files (no
+    // new file landed in it) — drop those explicitly (re-running after a
+    // crash converges: the redelivered purge deletes again)
+    parts.foreach { p =>
+      val part = partDir(dir, p)
+      if (dataFiles(part).forall(before(p).contains) && Blob.exists(part))
+        Blob.deleteTree(part)
     }
-    // checkpoint blocks die with the batch, not with a later GC cycle
-    // (Dataset.unpersist is a no-op for checkpointed frames)
-    graft.pipeline.Eager.releaseCheckpoint(m)
-  }
-
-  /** Store MAINTENANCE: compact the small files incremental ingest
-    * accumulates. Every micro-batch's dynamic partition overwrite rewrites
-    * each touched `(topic, bucket)` partition as fresh file(s), so a hot
-    * bucket ingesting across many batches collects many small parquet
-    * files — the canonical operational failure of incremental sinks at
-    * 100 TB (namenode/listing metadata pressure, seek-bound scans). The
-    * reference's Cassandra compacts SSTables for exactly this reason; a
-    * parquet store needs the job run explicitly (on Delta/Iceberg this is
-    * OPTIMIZE / rewrite_data_files).
-    *
-    * Only partitions whose file count exceeds `maxFiles` are touched:
-    * their rows are read back (partition-pruned), re-sorted on the
-    * replay key, and rewritten via the SAME dynamic-partition-overwrite
-    * path ingest uses — one file per partition afterwards, row-identical
-    * data, untouched partitions never opened (spec'd byte-identical).
-    * Safe to run between batches; a crash mid-compaction leaves standard
-    * dynamic-overwrite semantics (the partition has either old or new
-    * files, both row-identical). Returns per-table compacted-partition
-    * counts (zero = already compact; idempotent).
-    */
-  def compactStore(
-      spark: SparkSession,
-      storeDir: String,
-      maxFiles: Int = 4
-  ): Map[String, Int] = {
-    import org.apache.spark.sql.functions.col
-    Seq("journal", "metajournal").map { table =>
-      val dir = Loc.join(storeDir, table)
-      val over: Seq[(String, Int)] =
-        if (!Blob.exists(dir)) Seq.empty
-        else {
-          val parts = Blob.children(dir)
-            .filter(Loc.name(_).startsWith("topic="))
-            .flatMap { t =>
-              Blob.children(t)
-                .filter(Loc.name(_).startsWith("bucket="))
-                .map(b => (Loc.name(t).stripPrefix("topic="), b))
-            }
-          parts.flatMap { case (topic, b) =>
-            val nFiles = Blob.children(b).count { f =>
-              val n = Loc.name(f)
-              n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-            }
-            if (nFiles > maxFiles)
-              Some((topic, Loc.name(b).stripPrefix("bucket=").toInt))
-            else None
-          }
-        }
-      if (over.nonEmpty) {
-        val pred = over
-          .map { case (t, b) => col("topic") === t && col("bucket") === b }
-          .reduce(_ || _)
-        val cp = spark.read
-          .parquet(dir)
-          .filter(pred)
-          .localCheckpoint(true)
-        // one task owns all rows of a partition value => one output file
-        cp.repartition(col("topic"), col("bucket"))
-          .sortWithinPartitions("id")
-          .write
-          .mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("topic", "bucket")
-          .parquet(dir)
-        graft.pipeline.Eager.releaseCheckpoint(cp)
-      }
-      table -> over.size
-    }.toMap
   }
 
   /** Assembles the store from its on-disk layout (bucketed journal +
@@ -546,24 +505,17 @@ object StreamingReplicator {
       protocol: StoreCommitProtocol = FsCommitProtocol
   ): Replicate.Store = {
     val cur = protocol.resolveCurrent(storeDir)._1
-    def bucketed(name: String): DataFrame = {
+    def bucketed(name: String, layout: org.apache.spark.sql.types.StructType): DataFrame = {
       val dir = Loc.join(storeDir, name)
-      if (Blob.hasParquet(dir))
-        spark.read.parquet(dir).drop("bucket")
-      else {
-        val schema = org.apache.spark.sql.types.DataType
-          .fromJson(new String(
-            Blob.readBytes(Loc.join(storeDir, s"${name}_schema.json")),
-            "UTF-8"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
+      if (Blob.hasParquet(dir)) spark.read.schema(layout).parquet(dir).drop("bucket")
+      else
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      }
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), layout).drop("bucket")
     }
     Replicate.Store(
-      journal = bucketed("journal"),
-      metajournal = bucketed("metajournal"),
-      pointer2 = spark.read.parquet(Loc.join(cur, "pointer2"))
+      journal = bucketed("journal", Replicate.Layout.journal),
+      metajournal = bucketed("metajournal", Replicate.Layout.metajournal),
+      pointer2 = spark.read.schema(Replicate.Layout.pointer2).parquet(Loc.join(cur, "pointer2"))
     )
   }
 

@@ -18,11 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the per-file open cost is the only thing that grows.
   *
   * Row shape: (store, n_layers, n_files, debt_metric, debt,
-  * compact_recommended). Layer identities come from the layer PARTITION
-  * column (no data files read); file counts from [[Fs.countParquetFiles]]
-  * — the single listing API an object-store binding swaps out. Every
-  * directory resolves through [[DirSwap]], so the report always reads the
-  * published generation.
+  * compact_recommended). Layer identities come from ONE listing of each
+  * member's `layer=N` partition directories, counting a layer only when
+  * its data files hold rows (parquet footers — no data pages read, no
+  * Spark job); file counts from [[Fs.countParquetFiles]] — the single
+  * listing API an object-store binding swaps out. Every directory
+  * resolves through [[DirSwap]], so the report always reads the
+  * published generation, and both reports return a local relation.
   *
   * The generic contract the StoreHealthSpec drives per store:
   * accrete (appends raise debt) → recommend (threshold fires) →
@@ -49,17 +51,14 @@ object StoreHealth {
   private def liveDir(root: String, sub: String): String =
     DirSwap.resolve(root, sub)
 
-  /** One health row per store, computed from store METADATA only — and
-    * ONE Spark job for the whole registry: every layered member's layer
-    * partition column is unioned into a single (store, member, layer)
-    * frame and counted in one pass, instead of one distinct-count job per
-    * member per store (the round-11 note: at many stores × members the
-    * report is maintainer-cadence but should still be one job).
+  /** One health row per store, computed from store METADATA only, sorted
+    * by store name on the driver: no Spark job.
     */
   def healthAll(spark: SparkSession, stores: Seq[Store]): DataFrame = {
     import spark.implicits._
     healthRows(spark, stores)
       .map(_._2)
+      .sortBy(_._1)
       .toDF(
         "store",
         "n_layers",
@@ -68,7 +67,6 @@ object StoreHealth {
         "debt",
         "compact_recommended"
       )
-      .orderBy("store")
   }
 
   /** The per-store health tuples IN REGISTRY ORDER — shared by
@@ -80,55 +78,57 @@ object StoreHealth {
       spark: SparkSession,
       stores: Seq[Store]
   ): Seq[(Store, (String, Long, Long, String, Long, Boolean))] = {
-    import org.apache.spark.sql.functions._
     stores.foreach { st =>
       (st.layeredDirs ++ st.flatDirs).foreach(DirSwap.repair(st.root, _))
     }
-    // a member directory can be absent (optional, e.g. a frequency-only
-    // index's positions) or exist with ZERO data files (a store whose
-    // first batch had nothing to write) — both contribute no layers
-    // rather than failing schema inference
-    // keyed by the store's REGISTRY POSITION, not its name: two stores of
-    // the same type at different roots must not merge their layer sets
-    val members = for {
-      (st, idx) <- stores.zipWithIndex
-      sub <- st.layeredDirs
-      p = liveDir(st.root, sub)
-      if Fs.countParquetFiles(p) > 0
-    } yield (idx, sub, p)
-    val layerCounts: Map[Int, Long] =
-      if (members.isEmpty) Map.empty
-      else
-        members
-          .map { case (idx, sub, p) =>
-            spark.read
-              .parquet(p)
-              .select(
-                lit(idx).as("store_idx"),
-                lit(sub).as("member"),
-                col("layer").cast("long").as("layer")
-              )
-          }
-          .reduce(_.unionByName(_))
-          .groupBy("store_idx", "member")
-          .agg(countDistinct("layer").as("n"))
-          .groupBy("store_idx")
-          .agg(max("n").as("n_layers"))
-          .collect() // one row per store — driver-bounded
-          .map(r => r.getInt(0) -> r.getLong(1))
-          .toMap
-    stores.zipWithIndex
-      .map { case (st, idx) =>
-        val nLayers = layerCounts.getOrElse(idx, 1L)
-        val nFiles = (st.layeredDirs ++ st.flatDirs)
-          .map(sub => Fs.countParquetFiles(liveDir(st.root, sub)))
-          .sum
-        val (metric, debt, fire) =
-          if (st.layeredDirs.nonEmpty)
-            ("delta_layers", nLayers - 1L, nLayers > st.compactOverLayers)
-          else ("data_files", nFiles, nFiles > st.compactOverFiles)
-        st -> ((st.name, nLayers, nFiles, metric, debt, fire))
+    stores.map { st =>
+      // a member directory can be absent (optional, e.g. a frequency-only
+      // index's positions) or hold no rows yet — both contribute no layers
+      val nLayers = (st.layeredDirs.map(sub => layerCount(spark, liveDir(st.root, sub))) :+ 1L).max
+      val nFiles = (st.layeredDirs ++ st.flatDirs)
+        .map(sub => Fs.countParquetFiles(liveDir(st.root, sub)))
+        .sum
+      val (metric, debt, fire) =
+        if (st.layeredDirs.nonEmpty)
+          ("delta_layers", nLayers - 1L, nLayers > st.compactOverLayers)
+        else ("data_files", nFiles, nFiles > st.compactOverFiles)
+      st -> ((st.name, nLayers, nFiles, metric, debt, fire))
+    }
+  }
+
+  /** The distinct `layer=N` values of a member's partition directories
+    * (at any depth, e.g. under `wb=*` or `cid=*`) whose data files hold at
+    * least one row — the layers a read of the member sees. Hidden entries
+    * (`.layer-N-old-*` aside copies, `_SUCCESS`) are skipped as Spark
+    * skips them.
+    */
+  private def layerCount(spark: SparkSession, member: String): Long = {
+    def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    def files(loc: String, layer: Option[Long]): Seq[(Long, String)] =
+      Blob.children(loc).flatMap { c =>
+        val n = Loc.name(c)
+        if (hidden(n)) Nil
+        else if (n.contains("="))
+          files(c, if (n.startsWith("layer=")) n.stripPrefix("layer=").toLongOption else layer)
+        else if (n.endsWith(".parquet")) layer.map(_ -> c)
+        else Nil
       }
+    files(member, None)
+      .groupBy(_._1)
+      .count(_._2.exists { case (_, f) => rowCount(spark, f) > 0 })
+      .toLong
+  }
+
+  /** A parquet file's row count from its footer. */
+  private def rowCount(spark: SparkSession, loc: String): Long = {
+    val in =
+      if (Loc.hasScheme(loc))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(loc), spark.sparkContext.hadoopConfiguration)
+      else new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(loc))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getRecordCount
+    finally reader.close()
   }
 
   /** Runs every recommended store's compactor (each already publishes
@@ -145,7 +145,7 @@ object StoreHealth {
         if (due) st.compact(spark)
         (st.name, due)
       }
+      .sortBy(_._1)
       .toDF("store", "compacted")
-      .orderBy("store")
   }
 }

@@ -290,54 +290,6 @@ class ReplicatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     a.unpersist()
   }
 
-  test("compaction: row-identical, one file per hot partition, untouched bytes kept") {
-    import java.security.MessageDigest
-    import scala.jdk.CollectionConverters._
-    val a = actions.cache()
-    val tmp = Files.createTempDirectory("graft-compact").toString
-    // several batches over the same key space -> hot partitions collect
-    // one file per touching batch
-    chunks(a, 4).foreach(c => StreamingReplicator.applyBatch(spark, tmp, c))
-
-    def partFiles(table: String): Map[String, Seq[String]] = {
-      val root = java.nio.file.Paths.get(tmp, table)
-      val s = Files.walk(root)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map { p =>
-          val md = MessageDigest.getInstance("MD5")
-          p.getParent.toString ->
-            md.digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
-        }
-        .toSeq.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
-      finally s.close()
-    }
-
-    val before = partFiles("journal")
-    val hot = before.filter(_._2.size > 1).keySet
-    assert(hot.nonEmpty, "fixture must accumulate multi-file partitions")
-
-    val compacted = StreamingReplicator.compactStore(spark, tmp, maxFiles = 1)
-    assert(compacted("journal") == hot.size)
-
-    val after = partFiles("journal")
-    // every hot partition now holds exactly one file; cold partitions kept
-    // their exact bytes (never opened, never rewritten)
-    hot.foreach(p => assert(after(p).size == 1, p))
-    before.filterNot(k => hot(k._1)).foreach { case (p, sums) =>
-      assert(after(p) == sums, s"cold partition rewritten: $p")
-    }
-    // row-identical: the compacted store still equals the independent
-    // whole-log computation (exceptAll both ways per table)
-    val got = StreamingReplicator.readStore(spark, tmp)
-    assertStoreEquals(got, Replicate.compute(a))
-
-    // idempotent: a compact store compacts nothing
-    val again = StreamingReplicator.compactStore(spark, tmp, maxFiles = 1)
-    assert(again.values.sum == 0)
-    a.unpersist()
-  }
-
   test("generation swap isolation: every reader-visible state is exactly one committed generation") {
     // The swap protocol's isolation contract, demonstrated state by state:
     // a committing writer passes through four on-disk states between two

@@ -372,4 +372,58 @@ class StoreHealthSpec extends AnyFunSuite with BeforeAndAfterAll {
       rowsOf(Retrieval.keywordTopKIndexed(spark, sfDir, iiDir)) == before
     )
   }
+
+  test("a layer whose files hold no rows is not counted, nor is an aside copy") {
+    val sp = spark
+    import sp.implicits._
+    val dir = Files.createTempDirectory("graft-health-rows").toString
+    val entries = s"$dir/entries"
+    val rows = Seq(("t", "a", 1L)).toDF("topic", "id", "koffset")
+    StreamingHeadCache.writeLayer(rows, entries, 1L)
+    StreamingHeadCache.writeLayer(rows.filter(lit(false)), entries, 2L)
+    // a writeLayer crash leftover: hidden, so no read sees it
+    StreamingHeadCache.writeLayer(rows, s"$dir/scratch", 3L)
+    Files.move(java.nio.file.Paths.get(s"$dir/scratch/layer=3"),
+      java.nio.file.Paths.get(s"$entries/.layer-3-old-x"))
+    StreamingHeadCache.writeLayer(rows, s"$dir/wm", 1L)
+    assert(graft.util.Fs.countParquetFiles(s"$entries/layer=2") > 0, "fixture: layer 2 has a file")
+    val seen = spark.read.parquet(entries).select("layer").distinct().count()
+    val row = Maintenance.healthAll(spark, Seq(Maintenance.headCache(dir))).head()
+    assert(seen == 1L && row.getAs[Long]("n_layers") == seen)
+  }
+
+  test("healthAll, and a maintainAll with nothing due, run no Spark job") {
+    val sp = spark
+    import sp.implicits._
+    val dir = Files.createTempDirectory("graft-health-jobs").toString
+    val rows = Seq(("t", "a", 1L)).toDF("topic", "id", "koffset")
+    (1L to 3L).foreach { l =>
+      StreamingHeadCache.writeLayer(rows, s"$dir/head/entries", l)
+      StreamingHeadCache.writeLayer(rows, s"$dir/head/wm", l)
+    }
+    val stores = Seq(Maintenance.headCache(s"$dir/head"), Maintenance.snapshotStore(s"$dir/snap"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(f: => Any): Int = {
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
+      jobs.set(0)
+      f
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      var health: Array[org.apache.spark.sql.Row] = null
+      var maintained: Array[org.apache.spark.sql.Row] = null
+      assert(jobsOf { health = Maintenance.healthAll(spark, stores).collect() } == 0)
+      assert(jobsOf { maintained = Maintenance.maintainAll(spark, stores).collect() } == 0)
+      assert(health.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+        Seq("head_cache" -> 3L, "snapshot_store" -> 1L))
+      assert(maintained.forall(!_.getAs[Boolean]("compacted")))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
