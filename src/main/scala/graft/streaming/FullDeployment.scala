@@ -24,8 +24,8 @@ import graft.util.StoreHealth.Store
   * them from one composed tick rather than meeting only in per-plane
   * specs.
   *
-  * Tick order: journal plane first (head cache → snapshots → replicator
-  * → its maintainAll), then the retrieval plane (four ingest drains →
+  * Tick order: journal plane first (one stream: head cache → snapshots
+  * → replicator per batch, then its maintainAll), then the retrieval plane (four ingest drains →
   * its maintainAll, each store's fold boundary from its own streaming
   * commit log). The planes share no store, so the order between them is
   * free; within each plane the documented orderings are preserved by
@@ -58,7 +58,7 @@ final case class FullDeployment(
     */
   def registry: Seq[Store] = journal.registry ++ pipeline.registry
 
-  /** One composed tick: the journal plane's drains + maintenance, then
+  /** One composed tick: the journal plane's drain + maintenance, then
     * the retrieval plane's, returning the UNION of both maintenance
     * decision frames (store, compacted). The post-tick state is
     * [[health]] — one frame, all stores. A drain overrunning its budget

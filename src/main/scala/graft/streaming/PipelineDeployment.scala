@@ -167,8 +167,8 @@ final case class PipelineDeployment(
     * with the fold boundary at each ingest's own committed frontier,
     * returning the maintenance decisions (store, compacted) — the
     * post-maintenance state is [[health]]. A drain exceeding the budget
-    * ABORTS the tick before maintenance (the [[Deployment.tick]]
-    * argument verbatim) — and thanks to the commit-log-derived
+    * ABORTS the tick before maintenance ([[Deployment.drain]], the drain
+    * rule both deployments share) — and thanks to the commit-log-derived
     * protection, even a maintainer racing the aborted ingest's
     * uncommitted layer would leave it unfolded.
     */
@@ -188,65 +188,34 @@ final case class PipelineDeployment(
     // drain CONCURRENTLY (the reference's duties run concurrently from
     // its resource graph too) — the tick's wall is the slowest drain,
     // not the sum of four streaming-machinery startups. Contrast the
-    // journal-plane Deployment.tick, which is sequential BY CONTRACT
-    // (the head cache must drain before the replicator advances the
-    // watermark it evicts against); no such order exists here.
+    // journal-plane Deployment.tick, whose one stream applies each batch
+    // in statement order (the head cache before the replicator advances
+    // the watermark it evicts against); no such order exists here.
     // The media loop: arriving assets feature-extract ROW-LOCALLY
     // (mediaCodesOf — the scrub stream's extractor seam on a streaming
     // select) and append to the frozen media quantizer through the SAME
     // generic exact-IVF ingest the vec plane uses; the perceptual scrub
     // service (StreamingDedup.mediaScrubStream) runs beside it over the
     // same extractor.
-    val t0 = System.nanoTime()
-    // started queries are tracked INCREMENTALLY so that EVERY abort path
-    // stops all of them — a later stream's construction throwing, a
-    // drain failing with StreamingQueryException, or the tick budget
-    // overrunning all leave zero queries running behind the aborted
-    // tick; committed offsets persist and the next tick resumes all four
-    val started =
-      scala.collection.mutable.ArrayBuffer
-        .empty[(String, org.apache.spark.sql.streaming.StreamingQuery)]
-    def stopAll(): Unit =
-      started.foreach(d =>
-        try d._2.stop()
-        catch { case scala.util.control.NonFatal(_) => () })
-    try {
-      started += "text-index ingest" ->
-        StreamingRetrieval.ingestStream(docsIn, textIndexDir, ckText)()
-      started += "vector ingest" ->
+    Deployment.drain(drainTimeoutMs)(
+      "text-index ingest" -> (() =>
+        StreamingRetrieval.ingestStream(docsIn, textIndexDir, ckText)()),
+      "vector ingest" -> (() =>
         StreamingSimilarity.ingestExactStream(
           spark.readStream.schema(codesSchema).parquet(codesGlob),
           vecIndexDir,
           ckVec
-        )
-      started += "lm train" ->
-        StreamingCuration.lmTrainStream(docsIn, lmDir, ckLm)()
-      started += "media ingest" ->
+        )),
+      "lm train" -> (() => StreamingCuration.lmTrainStream(docsIn, lmDir, ckLm)()),
+      "media ingest" -> (() =>
         StreamingSimilarity.ingestExactStream(
           graft.pipeline.Multimodal.mediaCodesOf(
             spark.readStream.schema(mediaSchema).parquet(mediaGlob)
           ),
           mediaIndexDir,
           ckMedia
-        )
-      started.foreach { case (what, q) =>
-        val left =
-          drainTimeoutMs - (System.nanoTime() - t0) / 1000000L
-        if (left <= 0L || !q.awaitTermination(left)) {
-          // one overrun aborts the WHOLE tick before maintenance (the
-          // sequential contract preserved)
-          throw new IllegalStateException(
-            s"$what drain exceeded the ${drainTimeoutMs} ms tick budget — " +
-              "tick aborted before maintenance; committed offsets persist " +
-              "and the next tick resumes"
-          )
-        }
-      }
-    } catch {
-      case t: Throwable =>
-        stopAll()
-        throw t
-    }
+        ))
+    )
     graft.Maintenance.maintainAll(spark, registry)
   }
 

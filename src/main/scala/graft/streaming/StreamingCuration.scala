@@ -264,15 +264,13 @@ object StreamingCuration {
       modelDir: String,
       checkpointDir: String,
       compactEvery: Int = 0,
-      healthEvery: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
+      healthEvery: Int = 0
   )(
       healthSink: (DataFrame, Long) => Unit = (_, _) => ()
   ): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val layer = batchId + 1L
         graft.pipeline.QualityModel

@@ -530,8 +530,9 @@ object StreamingHeadCache {
 
   /** Continuous maintenance: each micro-batch of arriving ACTIONS is
     * folded and appended under its batch-id layer; `watermarkOf` snapshots
-    * the replicated-offset table at batch time (a deployment reads the
-    * replicator store's pointer2 — the two streams share the topic).
+    * the replicated-offset table at batch time. This is the standalone
+    * loop for one store; [[Deployment.tick]] calls [[appendBatch]] from
+    * the one stream it shares with the snapshots and the replicator.
     * Every `compactEvery` batches the entry layers fold with the
     * just-written layer protected (it may still be redelivered; its
     * predecessor is committed by then). The reference's flow, verbatim:
@@ -543,12 +544,11 @@ object StreamingHeadCache {
       storeDir: String,
       checkpointDir: String,
       watermarkOf: SparkSession => DataFrame,
-      compactEvery: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()
+      compactEvery: Int = 0
   ): StreamingQuery =
     actions.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val layer = batchId + 1L

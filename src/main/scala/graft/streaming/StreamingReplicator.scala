@@ -674,7 +674,8 @@ object StreamingReplicator {
 
   /** Runs the replicator over a parquet file stream of action records.
     * `Trigger.AvailableNow` drains what exists and stops — the batch-ingest
-    * mode; pass a processing-time trigger for a long-running tail.
+    * mode. The standalone replicator for one store: [[Deployment.tick]]
+    * feeds [[applyBatch]] from its one shared stream instead.
     */
   def streamFrom(
       spark: SparkSession,

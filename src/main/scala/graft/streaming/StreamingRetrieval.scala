@@ -571,14 +571,13 @@ object StreamingRetrieval {
       indexDir: String,
       checkpointDir: String,
       compactEvery: Int = 0,
-      healthEvery: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()
+      healthEvery: Int = 0
   )(
       healthSink: (DataFrame, Long) => Unit = (_, _) => ()
   ): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val layer = batchId + 1L
         Retrieval.appendToInvertedIndex(

@@ -93,6 +93,44 @@ object StreamingSimilarity {
       }
       .start()
 
+  /** Continuous ingest into the EXACT-INTEGER persisted IVF store (the
+    * p36d/hybrid dense leg's store): each micro-batch of arriving codes
+    * `(vec_id, q8)` is assigned row-locally to the FROZEN exact quantizer
+    * and appended under its own layer
+    * ([[Similarity.appendToIvfIndexExact]]) — the [[maintenanceStream]]
+    * discipline on the integer twin. Layer = batchId + 1, so a
+    * T1-redelivered batch REWRITES its own layer via dynamic partition
+    * overwrite and never stacks duplicate vector rows; `compactEvery`
+    * folds accreted layers with the just-written (possibly uncommitted)
+    * layer protected. A deployment that defers compaction to its own
+    * maintainer ([[PipelineDeployment]]) leaves `compactEvery` 0.
+    */
+  def ingestExactStream(
+      newCodes: DataFrame,
+      indexDir: String,
+      checkpointDir: String,
+      compactEvery: Int = 0
+  ): StreamingQuery =
+    newCodes.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val layer = batchId + 1L
+        Similarity.appendToIvfIndexExact(
+          batch.sparkSession,
+          batch,
+          indexDir,
+          layer
+        )
+        if (compactEvery > 0 && layer % compactEvery == 0)
+          Similarity.compactIvfIndex(
+            batch.sparkSession,
+            indexDir,
+            protectLayersAbove = layer - 1L
+          )
+      }
+      .start()
+
   /** The continuous index-maintenance loop — k10's append lifecycle and
     * k14's health row composed as a retrain TRIGGER: each arriving
     * micro-batch of `(vec_id, embedding)` rows is appended to the stored
@@ -114,45 +152,6 @@ object StreamingSimilarity {
     * full degrade → fire → retrain → clear cycle through this entry
     * point.
     */
-  /** Continuous ingest into the EXACT-INTEGER persisted IVF store (the
-    * p36d/hybrid dense leg's store): each micro-batch of arriving codes
-    * `(vec_id, q8)` is assigned row-locally to the FROZEN exact quantizer
-    * and appended under its own layer
-    * ([[Similarity.appendToIvfIndexExact]]) — the [[maintenanceStream]]
-    * discipline on the integer twin. Layer = batchId + 1, so a
-    * T1-redelivered batch REWRITES its own layer via dynamic partition
-    * overwrite and never stacks duplicate vector rows; `compactEvery`
-    * folds accreted layers with the just-written (possibly uncommitted)
-    * layer protected. A deployment that defers compaction to its own
-    * maintainer ([[PipelineDeployment]]) leaves `compactEvery` 0.
-    */
-  def ingestExactStream(
-      newCodes: DataFrame,
-      indexDir: String,
-      checkpointDir: String,
-      compactEvery: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery =
-    newCodes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val layer = batchId + 1L
-        Similarity.appendToIvfIndexExact(
-          batch.sparkSession,
-          batch,
-          indexDir,
-          layer
-        )
-        if (compactEvery > 0 && layer % compactEvery == 0)
-          Similarity.compactIvfIndex(
-            batch.sparkSession,
-            indexDir,
-            protectLayersAbove = layer - 1L
-          )
-      }
-      .start()
-
   def maintenanceStream(
       newVectors: DataFrame,
       indexDir: String,
@@ -160,12 +159,11 @@ object StreamingSimilarity {
       healthEvery: Int = 1,
       maxCellPpm: Long = 250000L,
       minRecallPpm: Long = 600000L,
-      compactEvery: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()
+      compactEvery: Int = 0
   )(healthSink: (DataFrame, Long) => Unit): StreamingQuery =
     newVectors.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         Similarity.appendToIvfIndex(spark, batch, indexDir, batchId + 1L)

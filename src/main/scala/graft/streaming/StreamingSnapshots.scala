@@ -333,7 +333,9 @@ object StreamingSnapshots {
   /** The continuous maintainer: arriving actions update the pointer
     * state, debt fires snapshot saves, and every `compactEvery` batches
     * the store folds (ring retention applied) with the just-written layer
-    * protected — the k14 monitor loop applied to recovery debt.
+    * protected — the k14 monitor loop applied to recovery debt. This is
+    * the standalone loop for one store; [[Deployment.tick]] calls
+    * [[appendMaintenanceBatch]] from its one shared stream.
     */
   def maintenanceStream(
       actions: DataFrame,
@@ -341,12 +343,11 @@ object StreamingSnapshots {
       checkpointDir: String,
       threshold: Long = 25L,
       bufferSize: Int = 3,
-      compactEvery: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()
+      compactEvery: Int = 0
   ): StreamingQuery =
     actions.writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val layer = batchId + 1L

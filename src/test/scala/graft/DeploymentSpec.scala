@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.journal.{JournalOps, Replay, Replicate, Snapshots}
 import graft.model.ActionLog
-import graft.streaming.{Deployment, StreamingSnapshots}
+import graft.streaming.{Deployment, StreamingReplicator, StreamingSnapshots}
+import graft.util.{Blob, ConcurrentStoreWriteException, DirSwap, Loc}
 
 /** The ONE-deployment integration law: a single action stream wired
   * through replicator + head cache (watermark from the replicator's own
@@ -25,6 +26,11 @@ import graft.streaming.{Deployment, StreamingSnapshots}
   *     threshold against the maintained snapshot store);
   *   - healthAll clears (the tick's maintainAll keeps every registry
   *     store below its debt threshold).
+  *
+  * The one shared stream is pinned too: a batch that fails after its
+  * head and snapshot layers landed is redelivered under its batch id and
+  * converges to an uninterrupted twin; a tick starts one query and reads
+  * each arriving row once; a base of the three-stream tick is refused.
   */
 class DeploymentSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -49,6 +55,39 @@ class DeploymentSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def assertSame(got: DataFrame, want: DataFrame, clue: String): Unit = {
     assert(got.exceptAll(want).count() == 0, s"$clue: extra rows")
     assert(want.exceptAll(got).count() == 0, s"$clue: missing rows")
+  }
+
+  /** Runs `f` with a streaming listener attached: the queries started,
+    * and each progress event's (batchId, numInputRows). Started events
+    * reach a session listener before `start()` returns; the rest arrive
+    * on the asynchronous listener bus, each query's termination after
+    * its progress, so the wait ends once every started query terminated.
+    */
+  private def observed[A](f: => A): (A, Int, Seq[(Long, Long)]) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val terminated = new java.util.concurrent.atomic.AtomicInteger
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet(): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress.batchId -> e.progress.numInputRows): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.incrementAndGet(): Unit
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = scala.util.Try(f)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (terminated.get < started.get && System.nanoTime() < deadline) Thread.sleep(20L)
+      (out.get, started.get, progress.toArray(Array.empty[(Long, Long)]).toSeq)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  private def halves(a: DataFrame): (DataFrame, DataFrame) = {
+    val mid = a.agg(max("event_id")).head().getLong(0) / 2
+    (a.filter(col("event_id") <= mid), a.filter(col("event_id") > mid))
   }
 
   test("one wiring drives all four loops: replay exact, cache ≡ fold + gated read identical, debt bounded, health clear") {
@@ -206,5 +245,97 @@ class DeploymentSpec extends AnyFunSuite with BeforeAndAfterAll {
     )
 
     a.unpersist(false)
+  }
+
+  test("redelivery through the shared loop: a batch refused at the replicator after its head and snapshot layers landed redelivers under its batch id and converges to the uninterrupted twin") {
+    val a = ActionLog.fromEvents(spark, sfDir).cache()
+    val (c0, c1) = halves(a)
+    val tmp = Files.createTempDirectory("graft-deploy-redeliver").toString
+    val in = s"$tmp/in"
+    val dep = Deployment(s"$tmp/dep", snapshotThreshold = 10L)
+    val twin = Deployment(s"$tmp/twin", snapshotThreshold = 10L)
+    c0.coalesce(1).write.parquet(s"$in/c0")
+    Seq(dep, twin).foreach(_.tick(spark, s"$in/c*", a.schema))
+    c1.coalesce(1).write.parquet(s"$in/c1")
+    twin.tick(spark, s"$in/c*", a.schema)
+
+    // a live foreign claim on the epoch the next batch would commit: the
+    // replicator, last in the batch, refuses after the head cache and the
+    // snapshots wrote their layers, so the batch fails before it commits
+    val epoch = StreamingReplicator.resolveCurrent(dep.storeDir)._2
+    val claim = Loc.join(dep.storeDir, s"claim-${epoch + 1}")
+    assert(Blob.createNew(claim, s"foreign/1 ${System.currentTimeMillis()}".getBytes("UTF-8")))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      dep.tick(spark, s"$in/c*", a.schema))
+    assert(
+      Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ConcurrentStoreWriteException]),
+      s"the replicator's claim refusal must abort the tick: $err")
+    def layerLanded(root: String, member: String): Boolean =
+      Blob.exists(Loc.join(DirSwap.resolve(root, member), "layer=2"))
+    assert(layerLanded(dep.headDir, "entries") && layerLanded(dep.headDir, "wm"), "head layer 2")
+    assert(layerLanded(dep.snapDir, "ptr"), "snapshot layer 2")
+    def logged(dir: String, batchId: Long): Boolean =
+      Files.exists(java.nio.file.Paths.get(dep.ckJournal, dir, batchId.toString))
+    assert(logged("offsets", 1L) && !logged("commits", 1L), "batch 1 planned, not committed")
+    assert(StreamingReplicator.resolveCurrent(dep.storeDir)._2 == epoch, "pointer2 did not advance")
+
+    // the claim goes; the next tick redelivers batch 1 and commits it
+    Blob.deleteIfExists(claim)
+    val (_, _, progress) = observed(dep.tick(spark, s"$in/c*", a.schema))
+    assert(progress.filter(_._2 > 0).map(_._1) == Seq(1L), s"batch 1 again: $progress")
+    assert(logged("commits", 1L) && !logged("offsets", 2L))
+
+    // rows compared by value after collect: exceptAll (assertSame) over
+    // these frames fails inside Spark's planner
+    def same(got: DataFrame, want: DataFrame, clue: String): Unit = {
+      def rows(df: DataFrame) =
+        df.select(got.columns.sorted.map(col).toIndexedSeq: _*).collect()
+          .map(_.toSeq.map {
+            case b: Array[Byte] => b.mkString(",") // payload bytes, by value
+            case v => String.valueOf(v)
+          }.mkString("|"))
+          .sorted.toSeq
+      assert(rows(got) == rows(want), clue)
+    }
+    val (got, want) = (dep.readStore(spark), twin.readStore(spark))
+    assert(got.pointer2.count() > 0 && dep.storedSnapshots(spark).count() > 0)
+    same(got.journal, want.journal, "journal")
+    same(got.metajournal, want.metajournal, "metajournal")
+    same(got.pointer2, want.pointer2, "pointer2")
+    same(dep.readHeads(spark), twin.readHeads(spark), "heads")
+    same(dep.storedSnapshots(spark), twin.storedSnapshots(spark), "snapshots")
+    val health = graft.Maintenance.healthAll(spark, dep.registry).collect()
+    assert(health.forall(!_.getAs[Boolean]("compact_recommended")), health.mkString("; "))
+    a.unpersist(false)
+  }
+
+  test("one stream per tick: one query started, and its input rows are the rows that arrived") {
+    val a = ActionLog.fromEvents(spark, sfDir).cache()
+    val (c0, c1) = halves(a)
+    val tmp = Files.createTempDirectory("graft-deploy-listener").toString
+    val dep = Deployment(s"$tmp/dep")
+    Seq(c0, c1).zipWithIndex.foreach { case (c, i) =>
+      c.coalesce(1).write.parquet(s"$tmp/in/c$i")
+      val (_, started, progress) = observed(dep.tick(spark, s"$tmp/in/c*", a.schema))
+      assert(started == 1, s"tick $i starts one stream")
+      assert(progress.map(_._2).sum == c.count(), s"tick $i reads each arriving row once")
+    }
+    a.unpersist(false)
+  }
+
+  test("a base written by the three-stream tick is refused before any stream starts, at a plain and a URI base") {
+    val a = ActionLog.fromEvents(spark, sfDir)
+    val tmp = Files.createTempDirectory("graft-deploy-old-base").toString
+    a.coalesce(1).write.parquet(s"$tmp/in/c0")
+    Seq(s"$tmp/plain", s"file://$tmp/uri").zip(Seq("ck-head", "ck-repl")).foreach {
+      case (base, old) =>
+        val dep = Deployment(base)
+        Blob.mkdirs(Loc.join(base, old))
+        val (err, started, _) = observed(
+          intercept[IllegalStateException](dep.tick(spark, s"$tmp/in/c*", a.schema)))
+        assert(err.getMessage.contains("a fresh base is required"), err.getMessage)
+        assert(started == 0 && !Blob.exists(dep.ckJournal), s"$base: no stream started")
+    }
   }
 }

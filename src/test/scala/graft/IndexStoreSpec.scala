@@ -524,7 +524,6 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("index lifecycle: streamed drift fires the retrain trigger; retraining clears it") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
     val ss = spark
     import ss.implicits._
     val tmp = Files.createTempDirectory("graft-health").toString
@@ -561,25 +560,22 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ms = MemoryStream[(Long, Seq[Float])]
     val healthRows = scala.collection.mutable.ArrayBuffer.empty[
       (Long, Long, Long, Long)] // (batchId, maxPpm, recallPpm, flag)
-    val q = graft.streaming.StreamingSimilarity.maintenanceStream(
-      ms.toDF().toDF("vec_id", "embedding"),
-      tmp,
-      ck,
-      trigger = Trigger.ProcessingTime(0L)
-    ) { (h, bid) =>
-      val r = h.collect().head
-      healthRows.synchronized {
-        healthRows += ((bid, r.getAs[Long]("max_cell_ppm"),
-          r.getAs[Long]("recall_ppm"),
-          r.getAs[Long]("retrain_recommended"))): Unit
-      }
+    // one AvailableNow run per chunk over the one checkpoint
+    drifted.grouped(drifted.size / 2 + 1).foreach { c =>
+      ms.addData(c)
+      graft.streaming.StreamingSimilarity.maintenanceStream(
+        ms.toDF().toDF("vec_id", "embedding"),
+        tmp,
+        ck
+      ) { (h, bid) =>
+        val r = h.collect().head
+        healthRows.synchronized {
+          healthRows += ((bid, r.getAs[Long]("max_cell_ppm"),
+            r.getAs[Long]("recall_ppm"),
+            r.getAs[Long]("retrain_recommended"))): Unit
+        }
+      }.awaitTermination()
     }
-    try
-      drifted.grouped(drifted.size / 2 + 1).foreach { c =>
-        ms.addData(c)
-        q.processAllAvailable()
-      }
-    finally q.stop()
 
     // the trigger FIRES: the drifted mass concentrates in few cells, so
     // the final health row crosses the ppm threshold

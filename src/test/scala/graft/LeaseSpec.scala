@@ -110,8 +110,11 @@ class LeaseSpec extends AnyFunSuite {
 
   test("two concurrent breakers of one expired lease: at most one wins, the loser publishes nothing") {
     bindings().foreach { case (name, s) =>
-      claim(s, leaseMs = 50L) // the stalled holder
-      Thread.sleep(120L)
+      // the stalled holder, stamped a minute ago: expired under the
+      // breakers' 5 s lease, while the winner's fresh claim cannot expire
+      // in the moment the other breaker races it
+      val stalledAt = System.currentTimeMillis() - 60000L
+      assert(s.createIfAbsent("maintainer.claim", s"stalled/1 $stalledAt"))
       val gate = new java.util.concurrent.CountDownLatch(1)
       val results =
         new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, String]]()
@@ -119,7 +122,7 @@ class LeaseSpec extends AnyFunSuite {
         new Thread(() => {
           gate.await()
           results.add(
-            try Right(claim(s, leaseMs = 50L))
+            try Right(claim(s, leaseMs = 5000L))
             catch { case t: Throwable => Left(t) }
           )
         })

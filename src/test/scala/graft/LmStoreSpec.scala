@@ -225,19 +225,14 @@ class LmStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     QualityModel.writeLmModelOf(spark, docs.filter(lit(false)), tmp)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingCuration.lmTrainStream(
-      in.toDF().toDF("doc_id", "text"),
-      tmp,
-      ckpt,
-      compactEvery = 2,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)
-    )()
-    try
-      hist.grouped((hist.size / 3).max(1)).foreach { c =>
-        in.addData(c): Unit
-        q.processAllAvailable()
-      }
-    finally q.stop()
+    // one AvailableNow run per chunk over the one checkpoint: each run is
+    // the trainer's next micro-batch
+    hist.grouped((hist.size / 3).max(1)).foreach { c =>
+      in.addData(c): Unit
+      graft.streaming.StreamingCuration
+        .lmTrainStream(in.toDF().toDF("doc_id", "text"), tmp, ckpt, compactEvery = 2)()
+        .awaitTermination()
+    }
 
     val full = Files.createTempDirectory("graft-lm-train-full").toString
     QualityModel.writeLmModelOf(spark, docs.filter(col("doc_id") < boundary), full)

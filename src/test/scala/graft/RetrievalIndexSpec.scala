@@ -1276,7 +1276,6 @@ class RetrievalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming ingest with interleaved compaction equals the one-shot index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
     val ss = spark
     import ss.implicits._
     val boundary = Dedup.incrementalBoundary(spark, sfDir)
@@ -1292,19 +1291,14 @@ class RetrievalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingRetrieval.ingestStream(
-      in.toDF().toDF("doc_id", "text"),
-      tmp,
-      ckpt,
-      compactEvery = 2,
-      trigger = Trigger.ProcessingTime(0L)
-    )()
-    try
-      arriving.grouped((arriving.size / 3).max(1)).foreach { c =>
-        in.addData(c): Unit
-        q.processAllAvailable()
-      }
-    finally q.stop()
+    // one AvailableNow run per arriving chunk over the one checkpoint:
+    // each run is the loop's next micro-batch
+    arriving.grouped((arriving.size / 3).max(1)).foreach { c =>
+      in.addData(c): Unit
+      graft.streaming.StreamingRetrieval
+        .ingestStream(in.toDF().toDF("doc_id", "text"), tmp, ckpt, compactEvery = 2)()
+        .awaitTermination()
+    }
 
     val full = Files.createTempDirectory("graft-ii-ingest-full").toString
     Retrieval.writeInvertedIndexOf(spark, docs, full)
@@ -1320,7 +1314,6 @@ class RetrievalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("index health: layer debt reported, recommendation fires and clears through the ingest loop") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
     val ss = spark
     import ss.implicits._
     val boundary = Dedup.incrementalBoundary(spark, sfDir)
@@ -1352,26 +1345,23 @@ class RetrievalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
     val in = MemoryStream[(Long, String)]
     val reports = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Boolean)]
-    val q = graft.streaming.StreamingRetrieval.ingestStream(
-      in.toDF().toDF("doc_id", "text"),
-      tmp2,
-      ckpt,
-      compactEvery = 4,
-      healthEvery = 1,
-      trigger = Trigger.ProcessingTime(0L)
-    ) { (h, bid) =>
-      val r = h.head()
-      reports.synchronized {
-        reports += ((bid, r.getAs[Long]("n_layers"),
-          r.getAs[Boolean]("compact_recommended"))): Unit
-      }
+    // one AvailableNow run per arriving chunk over the one checkpoint
+    arriving.grouped((arriving.size / 4).max(1)).foreach { c =>
+      in.addData(c): Unit
+      graft.streaming.StreamingRetrieval.ingestStream(
+        in.toDF().toDF("doc_id", "text"),
+        tmp2,
+        ckpt,
+        compactEvery = 4,
+        healthEvery = 1
+      ) { (h, bid) =>
+        val r = h.head()
+        reports.synchronized {
+          reports += ((bid, r.getAs[Long]("n_layers"),
+            r.getAs[Boolean]("compact_recommended"))): Unit
+        }
+      }.awaitTermination()
     }
-    try
-      arriving.grouped((arriving.size / 4).max(1)).foreach { c =>
-        in.addData(c): Unit
-        q.processAllAvailable()
-      }
-    finally q.stop()
     assert(reports.nonEmpty)
     // layers accrete batch by batch before the compaction batch...
     assert(reports.exists(_._2 > 1L))
