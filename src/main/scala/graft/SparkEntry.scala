@@ -84,13 +84,14 @@ object SparkEntry {
         .mergedRead(actions(s, d))
         .select("topic", "id", "seq_nr", "koffset", "ts", "payload")),
     // j1b — the replay with its tail leg GATED by the maintained head
-    // cache (the reference's consult-cache-then-read flow); row-identical
-    // to j1 by the HeadCacheSpec law, so it carries j1's oracle
+    // cache (the reference's consult-cache-then-read flow), one replay
+    // fold over the log and the cache's entry rows; row-identical to j1
+    // by the HeadCacheSpec law, so it carries j1's oracle
     "j1b_replay_gated" -> ((s, d) =>
       graft.streaming.StreamingHeadCache.gatedReplayQuery(s, actions(s, d))),
     // j1c — the FULL client recovery (api.Journal.recoverCached over all
-    // journals): snapshot floor + head-cache-gated tail in one query;
-    // row-identical to s10d by the j1b and s10d laws composed
+    // journals): snapshot floor + head-cache-gated tail in one replay
+    // fold; row-identical to s10d by the j1b and s10d laws composed
     "j1c_recover_cached" -> ((s, d) =>
       graft.streaming.StreamingHeadCache.cachedRecoveryQuery(s, actions(s, d))),
     "f4_dedup_replay" -> ((s, d) => Replay.dedupReplay(actions(s, d))),

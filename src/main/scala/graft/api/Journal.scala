@@ -35,7 +35,10 @@ final class Journal(
 
   /** Events of one journal from `fromSeqNr`, replay order — the recovery
     * query (reference Journals.scala:194-301): merged store prefix + log
-    * tail with dedup and delete/purge semantics.
+    * tail with dedup and delete/purge semantics, as
+    * [[graft.journal.Replay.mergedRead]] over the key-filtered log (its
+    * fractions positioned over this journal's offsets): one driver
+    * collect of the bounds, then one keyed fold.
     *
     * `strict` enables the F5 seqNr-uniqueness check on the replicated
     * prefix (reference `seqNrUniqueness` config, Journal.scala:458-480):
@@ -92,16 +95,17 @@ final class Journal(
   /** [[read]] THROUGH the maintained head cache — the reference client's
     * actual read flow (Journals.scala:141-175: every read first consults
     * the HeadCache and skips the Kafka tail when the cached head proves it
-    * holds nothing to replay). Row-identical to
+    * holds nothing to replay). The semantics of
     * [[graft.journal.Replay.mergedReadAtWatermark]] over the key's log,
-    * cached head and the cache's stored watermark (CachedReplaySpec), and
-    * so to [[read]] (the gated-read law, re-proved at this surface in
+    * cached head and the cache's stored watermark, and row-identical to
+    * [[read]] (the gated-read law, re-proved at this surface in
     * JournalOpsSpec).
     *
-    * It runs as ONE keyed fold ([[graft.journal.CachedReplay.read]]):
-    * the log, the journal's head-cache entries and its topic's watermark
-    * rows are each scanned with the key predicate, unioned, grouped once
-    * on (topic, id) and folded in Scala — one exchange, no global sort.
+    * It runs the replay fold ([[graft.journal.CachedReplay.read]]) with
+    * every input read under the key predicate: the log, the journal's
+    * head-cache entries and its topic's watermark rows are unioned,
+    * grouped once on (topic, id) and folded in Scala — no driver
+    * collect, one exchange, no global sort.
     *
     * The eventual/tail boundary of each log row is the cache's stored
     * watermark for that row's partition — the mark the cache evicted at
@@ -157,8 +161,9 @@ final class Journal(
   /** Snapshot-accelerated recovery of one journal — the reference's actual
     * recovery flow (SnapshotStore.scala:26-34 + Journals.read): the latest
     * snapshot plus only the events after its seq_nr, `src`-tagged rows in
-    * fold order ([[graft.journal.Snapshots.recovery]] filtered to the
-    * key). A journal with no snapshot replays in full — recover ≡ read
+    * fold order ([[graft.journal.Snapshots.recovery]] over the
+    * key-filtered log: the fixture snapshots join the replay fold's
+    * union). A journal with no snapshot replays in full — recover ≡ read
     * for it; with one, recover's event leg is exactly read's suffix above
     * the snapshot (the api-spec law).
     */
@@ -175,7 +180,8 @@ final class Journal(
     * keeping per-journal debt below its threshold
     * (SnapshotMaintenanceSpec), this read's replay suffix is bounded by
     * that threshold — the reference's recovery-cost contract made
-    * operational.
+    * operational. One replay fold over the key-filtered log and snapshots
+    * ([[graft.journal.Snapshots.recoveryWith]]).
     */
   def recoverThrough(
       snapshots: DataFrame,
@@ -193,10 +199,11 @@ final class Journal(
     * SnapshotStore supplies the fold floor AND the HeadCache gates the
     * Kafka tail): the latest snapshot plus only the events after it, with
     * the event leg read THROUGH the maintained head cache ([[readCached]]'s
-    * gate and staleness contract, verbatim). Row-identical to
+    * gate and staleness contract, verbatim). The semantics of
     * [[graft.journal.Snapshots.recoveryOver]] of the gated read and the
-    * key's snapshots (CachedReplaySpec), hence to [[recoverThrough]],
-    * including the evicted-journal and stale-cache paths.
+    * key's snapshots, row-identical to [[recoverThrough]], including the
+    * evicted-journal and stale-cache paths (CachedReplaySpec checks it
+    * against the join/window composition the fold replaced).
     *
     * One keyed fold ([[graft.journal.CachedReplay.recover]]): the log,
     * the head-cache rows and the key-filtered `snapshots` frame

@@ -109,14 +109,9 @@ object Snapshots {
     * the events AFTER its seq_nr; a journal with no snapshot replays in
     * full. Output rows carry `src` ('snapshot' | 'event') so the consumer
     * sees exactly what a recovering entity would fold: at most one
-    * snapshot row, then the event suffix in seq order.
-    *
-    * Scale shape: the snapshot frame is KEY-GRAIN (one row per journal) —
-    * the suffix filter is one keyed shuffle join of the replay against it
-    * (at 100 TB the journal count is large, so this is a join, not a
-    * broadcast), and the event with seq_nr = snapshot seq_nr is excluded
-    * (the snapshot subsumes it), so recovery reads shrink by exactly the
-    * snapshotted prefix.
+    * snapshot row, then the event suffix in seq order. The event with
+    * seq_nr = snapshot seq_nr is excluded (the snapshot subsumes it), so
+    * recovery reads shrink by exactly the snapshotted prefix.
     */
   def recovery(actions: DataFrame): DataFrame =
     recoveryWith(
@@ -128,60 +123,26 @@ object Snapshots {
     * koffset, payload — several rows per journal allowed; the latest
     * wins), the form the maintenance loop recovers through: the fixture
     * rule stops being the source of snapshots once [[applySnapshots]] /
-    * the streaming saver writes real ones.
+    * the streaming saver writes real ones. The event leg is
+    * [[Replay.mergedRead]]; the snapshot rows join the replay's keyed
+    * union, so the whole recovery is ONE fold per journal
+    * ([[CachedReplay]]), in (topic, id, seq_nr) order.
     */
   def recoveryWith(actions: DataFrame, snapshots: DataFrame): DataFrame =
-    recoveryOver(
-      Replay
-        .mergedRead(actions)
-        .select("topic", "id", "seq_nr", "koffset", "payload"),
-      snapshots
-    )
+    CachedReplay.recoveryWith(actions, snapshots)
 
-  /** [[recoveryWith]] over an EXPLICIT replay frame (topic, id, seq_nr,
+  /** The snapshot floor over an EXPLICIT replay frame (topic, id, seq_nr,
     * koffset, payload) — the seam that lets the event leg come from ANY
-    * read formulation: [[recoveryWith]] passes the ungated merged read;
-    * the j1c query passes the head-cache-GATED read
-    * ([[graft.journal.Replay.mergedReadAtWatermark]]), composing the
-    * reference client's two recovery accelerators (snapshot floor +
-    * cache-gated tail) in one query. The api's one-journal
-    * `recoverCached` runs this composition as a keyed fold
-    * ([[CachedReplay.recover]]), checked against it.
+    * read formulation, e.g. the head-cache-GATED
+    * [[Replay.mergedReadAtWatermark]], composing the reference client's
+    * two recovery accelerators (snapshot floor + cache-gated tail). The
+    * replay and snapshot rows are grouped once per journal and floored
+    * by the same step [[recoveryWith]] and the api's one-journal
+    * `recoverCached` run ([[CachedReplay]]), in (topic, id, seq_nr)
+    * order.
     */
-  def recoveryOver(replay: DataFrame, snapshots: DataFrame): DataFrame = {
-    val pick = Window.partitionBy("topic", "id").orderBy(col("seq_nr").desc)
-    val snap = snapshots
-      .withColumn("rn", row_number().over(pick))
-      .filter(col("rn") === 1)
-      .select(
-        col("topic"),
-        col("id"),
-        col("seq_nr").as("snap_seq"),
-        col("koffset").as("snap_koffset"),
-        col("payload").as("snap_payload")
-      )
-    val snapRows = snap.select(
-      col("topic"),
-      col("id"),
-      lit("snapshot").as("src"),
-      col("snap_seq").as("seq_nr"),
-      col("snap_koffset").as("koffset"),
-      col("snap_payload").as("payload")
-    )
-    val tail = replay
-      .select("topic", "id", "seq_nr", "koffset", "payload")
-      .join(snap.select("topic", "id", "snap_seq"), Seq("topic", "id"), "left")
-      .filter(col("snap_seq").isNull || col("seq_nr") > col("snap_seq"))
-      .select(
-        col("topic"),
-        col("id"),
-        lit("event").as("src"),
-        col("seq_nr"),
-        col("koffset"),
-        col("payload")
-      )
-    snapRows.unionByName(tail).orderBy("topic", "id", "seq_nr")
-  }
+  def recoveryOver(replay: DataFrame, snapshots: DataFrame): DataFrame =
+    CachedReplay.recoveryOver(replay, snapshots)
 
   // ---------------------------------------------------------------------
   // S10e — snapshot MAINTENANCE: the s10 plane's k14. A deployment's

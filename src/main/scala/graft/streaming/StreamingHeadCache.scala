@@ -313,21 +313,20 @@ object StreamingHeadCache {
       .select("topic", "part_no", "wm", "end_offset")
   }
 
-  /** One journal's entry rows and its topic's watermark rows, each scan
-    * carrying the key predicate — the head-cache inputs of the one-journal
-    * fold ([[graft.journal.CachedReplay]]).
+  /** The raw entry and watermark rows — for `key`, its entry rows and
+    * its topic's watermark rows, each scan carrying the key predicate —
+    * the head-cache inputs of the replay fold ([[graft.journal.CachedReplay]]).
     */
-  private[graft] def keyedLayers(
+  private[graft] def layers(
       spark: SparkSession,
       storeDir: String,
-      topic: String,
-      id: String
+      key: Option[(String, String)]
   ): (DataFrame, DataFrame) = {
     repairHeadCache(storeDir)
-    (
-      readEntries(spark, storeDir).filter(col("topic") === topic && col("id") === id),
-      readWm(spark, storeDir).filter(col("topic") === topic)
-    )
+    val (entries, wm) = (readEntries(spark, storeDir), readWm(spark, storeDir))
+    key.fold((entries, wm)) { case (topic, id) =>
+      (entries.filter(col("topic") === topic && col("id") === id), wm.filter(col("topic") === topic))
+    }
   }
 
   /** The merged per-partition (watermark, end offset) view. */
@@ -558,18 +557,52 @@ object StreamingHeadCache {
       }
       .start()
 
-  /** Null-safe max offset of an action log: `None` on an EMPTY log (a
-    * bare `getLong(0)` on the aggregate row throws on the null primitive
-    * — the lifecycle queries short-circuit instead of chunking nothing).
+  /** Folds `actions` into a fresh head cache in `nChunks` offset-ordered
+    * layers at the default watermark, then runs `read` over the cache
+    * directory, materialized before the cache is deleted. Each chunk
+    * folds independently into its OWN layer (appends never read or
+    * rewrite each other's layers), so the ingests run concurrently
+    * (guide §2.6) and the cache is bit-identical to the sequential
+    * arrival, layer by layer. With `compactAfter = Some(m)` the chunks
+    * run in two groups around one compaction that folds layers 1..m+1,
+    * bit-identical to a mid-stream compaction of the sequential arrival.
+    * `None` for an EMPTY log: zero chunks have no layers to append.
     */
-  private def maxOffsetOf(a: DataFrame): Option[Long] =
-    Option(a.agg(max("koffset")).head().getAs[java.lang.Long](0)).map(_.toLong)
+  private def throughChunkedCache(
+      spark: SparkSession,
+      actions: DataFrame,
+      nChunks: Int,
+      name: String,
+      compactAfter: Option[Int] = None
+  )(read: String => DataFrame): Option[DataFrame] =
+    Option(actions.agg(max("koffset")).head().getAs[java.lang.Long](0)).map { maxOff =>
+      val wm = graft.journal.JournalOps.defaultWatermark(actions)
+      val step = maxOff / nChunks + 1
+      graft.pipeline.Eager.withTempStore(s"graft-$name-head") { tmp =>
+        def append(chunks: Range): Unit =
+          graft.util.Par.run(chunks.map { i => () =>
+            val chunk = actions.filter(
+              col("koffset") >= i * step && col("koffset") < (i + 1) * step
+            )
+            appendBatch(spark, chunk, tmp, wm, layer = i + 1L)
+          }: _*)
+        compactAfter match {
+          case None => append(0 until nChunks)
+          case Some(mid) =>
+            append(0 to mid)
+            compactHeadCache(spark, tmp, protectLayersAbove = mid + 1L)
+            append((mid + 1) until nChunks)
+        }
+        read(tmp)
+      }
+    }
 
   /** J1b — the HEAD-CACHE-GATED replay as one oracle-replayable lifecycle
     * query: maintain the cache over the chunked log (the t6b flow), then
-    * run the merged two-source replay with the tail leg gated by the
-    * maintained heads ([[graft.journal.Replay.mergedReadGated]]) — the
-    * reference's consult-cache-then-read composition, end to end.
+    * read every journal through it (api.Journal.readCached with no key
+    * predicate): one replay fold over the log and the cache's entry rows,
+    * the tail read only where the cached head is an append or the cache
+    * has not seen a row, at the cache's own stored watermark.
     * Row-identical to the ungated J1 (HeadCacheSpec law), so it carries
     * J1's oracle.
     */
@@ -577,80 +610,37 @@ object StreamingHeadCache {
       spark: SparkSession,
       actions: DataFrame,
       nChunks: Int = 4
-  ): DataFrame = {
-    val a = actions
-    val wm = graft.journal.JournalOps.defaultWatermark(a)
-    val maxOff = maxOffsetOf(a).getOrElse {
-      // empty log: the gated read of nothing is nothing — short-circuit
-      // before the store (chunking an empty log has no layers to append)
-      return a.select("topic", "id", "seq_nr", "koffset", "ts", "payload")
-    }
-    val step = maxOff / nChunks + 1
-    graft.pipeline.Eager.withTempStore("graft-j1b-head") { tmp =>
-      // each chunk folds independently into its OWN layer (the store's
-      // whole point: appends never read or rewrite each other's layers),
-      // so the ingests run concurrently (guide §2.6) — the cache contents
-      // are bit-identical to the sequential arrival, layer by layer
-      graft.util.Par.run((0 until nChunks).map { i => () =>
-        val chunk = a.filter(
-          col("koffset") >= i * step && col("koffset") < (i + 1) * step
-        )
-        appendBatch(spark, chunk, tmp, wm, layer = i + 1L)
-      }: _*)
-      graft.journal.Replay
-        .mergedReadGated(a, readHeads(spark, tmp))
+  ): DataFrame =
+    throughChunkedCache(spark, actions, nChunks, "j1b") { tmp =>
+      graft.journal.CachedReplay
+        .throughCache(spark, actions, tmp, snapshots = None)
         .select("topic", "id", "seq_nr", "koffset", "ts", "payload")
-    }
-  }
+    }.getOrElse(actions.select("topic", "id", "seq_nr", "koffset", "ts", "payload"))
 
   /** J1c — the reference client's FULL recovery flow as one
     * oracle-replayable lifecycle query (api.Journal.recoverCached over
     * every journal): the log arrives in `nChunks` offset-ordered batches
-    * folded into the maintained head cache, then recovery composes BOTH
-    * accelerators — the snapshot floor
-    * ([[graft.journal.Snapshots.recoveryOver]] over the fixture snapshot
-    * table) and the cache-GATED tail
-    * ([[graft.journal.Replay.mergedReadAtWatermark]] at the cache's own
-    * stored watermark). Row-identical to the ungated
-    * [[graft.journal.Snapshots.recovery]] by composition of the gated-read
-    * law (j1b) and the snapshot-floor law (s10d), so the query carries
-    * s10d's oracle.
+    * folded into the maintained head cache, then ONE fold recovers every
+    * journal with BOTH accelerators — the snapshot floor (the fixture
+    * snapshot table) and the cache-GATED tail at the cache's own stored
+    * watermark: the semantics of [[graft.journal.Snapshots.recoveryOver]]
+    * ∘ [[graft.journal.Replay.mergedReadAtWatermark]]. Row-identical to
+    * the ungated [[graft.journal.Snapshots.recovery]] by composition of
+    * the gated-read law (j1b) and the snapshot-floor law (s10d), so the
+    * query carries s10d's oracle. An empty log recovers through
+    * [[graft.journal.Snapshots.recovery]] (both legs empty).
     */
   def cachedRecoveryQuery(
       spark: SparkSession,
       actions: DataFrame,
       nChunks: Int = 4
   ): DataFrame = {
-    val a = actions
-    val wm = graft.journal.JournalOps.defaultWatermark(a)
-    val maxOff = maxOffsetOf(a).getOrElse {
-      // empty log: snapshot-only recovery (both legs empty, correct
-      // schema) without building a cache over zero chunks
-      return graft.journal.Snapshots.recoveryOver(
-        a.select("topic", "id", "seq_nr", "koffset", "payload"),
-        graft.journal.Snapshots
-          .table(a)
-          .select("topic", "id", "seq_nr", "koffset", "payload")
-      )
-    }
-    val step = maxOff / nChunks + 1
-    graft.pipeline.Eager.withTempStore("graft-j1c-head") { tmp =>
-      // independent layer-keyed ingests — concurrent, as in j1b
-      graft.util.Par.run((0 until nChunks).map { i => () =>
-        val chunk = a.filter(
-          col("koffset") >= i * step && col("koffset") < (i + 1) * step
-        )
-        appendBatch(spark, chunk, tmp, wm, layer = i + 1L)
-      }: _*)
-      graft.journal.Snapshots.recoveryOver(
-        graft.journal.Replay
-          .mergedReadAtWatermark(a, readHeads(spark, tmp), watermark(spark, tmp))
-          .select("topic", "id", "seq_nr", "koffset", "payload"),
-        graft.journal.Snapshots
-          .table(a)
-          .select("topic", "id", "seq_nr", "koffset", "payload")
-      )
-    }
+    val snapshots = graft.journal.Snapshots
+      .table(actions)
+      .select("topic", "id", "seq_nr", "koffset", "payload")
+    throughChunkedCache(spark, actions, nChunks, "j1c") { tmp =>
+      graft.journal.CachedReplay.throughCache(spark, actions, tmp, Some(snapshots))
+    }.getOrElse(graft.journal.Snapshots.recovery(actions))
   }
 
   /** T6b — the reader's decision table THROUGH the cache, as one
@@ -666,49 +656,10 @@ object StreamingHeadCache {
       spark: SparkSession,
       actions: DataFrame,
       nChunks: Int = 4
-  ): DataFrame = {
-    val a = actions
-    val wm = graft.journal.JournalOps.defaultWatermark(a)
-    val maxOff = maxOffsetOf(a).getOrElse {
-      // empty log: no journals, no heads — the readHeads row shape with
-      // zero rows (the store path cannot run: zero chunks, no layers)
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(
-          Seq(
-            StructField("topic", StringType),
-            StructField("id", StringType),
-            StructField("part_no", IntegerType),
-            StructField("kind", StringType),
-            StructField("head_offset", LongType),
-            StructField("head_seq_nr", LongType),
-            StructField("lag", LongType),
-            StructField("tail_skippable", BooleanType)
-          )
-        )
-      )
-    }
-    val step = maxOff / nChunks + 1
-    graft.pipeline.Eager.withTempStore("graft-t6b-head") { tmp =>
-      // layer-keyed appends are independent (the j1b argument), but the
-      // MID-STREAM compaction is this query's point — it folds exactly
-      // the layers appended so far. So the chunks run concurrently in
-      // two groups around the compaction barrier: [0..nChunks/2] →
-      // compact → the rest. Store states at the barrier and at the end
-      // are bit-identical to the sequential arrival.
-      val mid = nChunks / 2
-      def append(i: Int): Unit = {
-        val chunk = a.filter(
-          col("koffset") >= i * step && col("koffset") < (i + 1) * step
-        )
-        appendBatch(spark, chunk, tmp, wm, layer = i + 1L)
-      }
-      graft.util.Par.run((0 to mid).map(i => () => append(i)): _*)
-      compactHeadCache(spark, tmp, protectLayersAbove = mid + 1L)
-      graft.util.Par.run(
-        ((mid + 1) until nChunks).map(i => () => append(i)): _*)
+  ): DataFrame =
+    // the MID-STREAM compaction is this query's point: it folds exactly
+    // the layers appended so far
+    throughChunkedCache(spark, actions, nChunks, "t6b", compactAfter = Some(nChunks / 2)) { tmp =>
       // head_delete_to stays cache-internal here: the typed fold CLAMPS
       // deleteTo to the seqNr seen at each step (the reference's
       // semantics, HeadInfo.scala:222-236) while the SQL-expressible
@@ -726,6 +677,25 @@ object StreamingHeadCache {
           "tail_skippable"
         )
         .orderBy("topic", "id")
+    }.getOrElse {
+      // empty log: no journals, no heads — the readHeads row shape with
+      // zero rows
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        StructType(
+          Seq(
+            StructField("topic", StringType),
+            StructField("id", StringType),
+            StructField("part_no", IntegerType),
+            StructField("kind", StringType),
+            StructField("head_offset", LongType),
+            StructField("head_seq_nr", LongType),
+            StructField("lag", LongType),
+            StructField("tail_skippable", BooleanType)
+          )
+        )
+      )
     }
-  }
 }

@@ -7,15 +7,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.journal.{JournalOps, Replay, Snapshots}
+import graft.journal.{CachedReplay, JournalOps, Replay, Snapshots}
 import graft.model.ActionLog
 import graft.streaming.{StreamingHeadCache, StreamingSnapshots}
 
-/** The one-journal keyed fold behind `api.Journal.readCached` /
-  * `recoverCached` (graft.journal.CachedReplay) against the DataFrame
-  * composition it replaces — [[Replay.mergedReadAtWatermark]] over the
-  * key-filtered log, `readHeads` and `watermark`, and
-  * [[Snapshots.recoveryOver]] on top — row for row, in order:
+/** The keyed replay fold (graft.journal.CachedReplay) against the
+  * join/window composition it replaced ([[ReplayComposition]]), row for
+  * row, in order. The one-journal forms `api.Journal.readCached` /
+  * `recoverCached` against the composed `mergedReadAtWatermark` over the
+  * key-filtered log, `readHeads` and `watermark`, with `recoveryOver` on
+  * top:
   *
   *   - a spread of the fixture's journals under a chunked cache, and the
   *     evicted journals of a nearly caught-up cache;
@@ -25,7 +26,10 @@ import graft.streaming.{StreamingHeadCache, StreamingSnapshots}
   *   - purge-then-recreate, redelivered duplicates, a snapshot older
   *     than the purge, and the strict-mode integrity error;
   *
-  * plus the job count of one recovery, read and pointer, listener-counted.
+  * every whole-log form over the whole fixture (the merged reads, the
+  * recoveries, and the j1b and j1c queries), and the job counts of one
+  * recovery, read and pointer and of the j1b and j1c read steps,
+  * listener-counted.
   */
 class CachedReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -55,13 +59,11 @@ class CachedReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def key(df: DataFrame, t: String, i: String): DataFrame =
     df.filter(col("topic") === t && col("id") === i)
 
-  /** The DataFrame composition: readCached's and recoverCached's
-    * previous form, kept as the whole-log queries' read path.
-    */
+  /** The composition, for one journal. */
   private def composedRead(
       log: DataFrame, t: String, i: String, dir: String, strict: Boolean = false
   ): DataFrame =
-    Replay.mergedReadAtWatermark(
+    ReplayComposition.mergedReadAtWatermark(
       key(log, t, i),
       key(StreamingHeadCache.readHeads(spark, dir), t, i),
       StreamingHeadCache.watermark(spark, dir),
@@ -71,7 +73,7 @@ class CachedReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def composedRecover(
       log: DataFrame, t: String, i: String, snaps: DataFrame, dir: String
   ): DataFrame =
-    Snapshots.recoveryOver(
+    ReplayComposition.recoveryOver(
       composedRead(log, t, i, dir).select("topic", "id", "seq_nr", "koffset", "payload"),
       key(snaps, t, i).select("topic", "id", "seq_nr", "koffset", "payload")
     )
@@ -323,6 +325,90 @@ class CachedReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(journal.readCached("t", "j", dir)) == rows(composedRead(log, "t", "j", dir)))
   }
 
+  private val recoveryCols = Seq("topic", "id", "seq_nr", "koffset", "payload")
+
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val (g, w) = (rows(got), rows(want))
+    assert(g._2.nonEmpty, s"$what: non-vacuous")
+    assert(g == w, s"$what ≡ composition")
+  }
+
+  test("whole log: mergedRead, lax and strict, ≡ composition") {
+    val a = actions.cache()
+    assertSameRows(Replay.mergedRead(a), ReplayComposition.mergedRead(a), "mergedRead")
+    assertSameRows(
+      Replay.mergedRead(a, strictUniqueness = true),
+      ReplayComposition.mergedRead(a, strictUniqueness = true),
+      "strict mergedRead")
+    a.unpersist(false)
+  }
+
+  test("whole log: mergedReadGated over a chunked cache and the j1b query ≡ composition") {
+    val a = actions.cache()
+    val dir = tmp("whole-gated")
+    chunkedCache(a, dir)
+    val heads = StreamingHeadCache.readHeads(spark, dir)
+    val want = ReplayComposition.mergedReadGated(a, heads)
+    assertSameRows(Replay.mergedReadGated(a, heads), want, "mergedReadGated")
+    assertSameRows(
+      StreamingHeadCache.gatedReplayQuery(spark, a),
+      want.select("topic", "id", "seq_nr", "koffset", "ts", "payload"),
+      "j1b")
+    a.unpersist(false)
+  }
+
+  test("whole log: mergedReadAtWatermark with end_offset, wm only, and an uncovered partition ≡ composition") {
+    val a = actions.cache()
+    val chunked = tmp("whole-wm-chunked")
+    chunkedCache(a, chunked)
+    val hot = tmp("whole-wm-hot")
+    hotCache(a, hot)
+    Seq(chunked, hot).foreach { dir =>
+      val heads = StreamingHeadCache.readHeads(spark, dir)
+      val wm = StreamingHeadCache.watermark(spark, dir)
+      val first = wm.orderBy("topic", "part_no").head()
+      val uncovered = wm.filter(!(col("topic") === first.getString(0) && col("part_no") === first.getInt(1)))
+      Seq(
+        "end_offset" -> wm,
+        "wm only" -> wm.select("topic", "part_no", "wm"),
+        "uncovered" -> uncovered,
+        "uncovered, wm only" -> uncovered.select("topic", "part_no", "wm")
+      ).foreach { case (what, frame) =>
+        assertSameRows(
+          Replay.mergedReadAtWatermark(a, heads, frame),
+          ReplayComposition.mergedReadAtWatermark(a, heads, frame),
+          s"mergedReadAtWatermark ($what)")
+      }
+    }
+    a.unpersist(false)
+  }
+
+  test("whole log: recovery, recoveryWith, recoveryOver and the j1c query ≡ composition") {
+    val a = actions.cache()
+    val snaps = storedSnaps(a).select(recoveryCols.map(col): _*).cache()
+    assertSameRows(Snapshots.recovery(a), ReplayComposition.recovery(a), "recovery")
+    assertSameRows(Snapshots.recoveryWith(a, snaps), ReplayComposition.recoveryWith(a, snaps), "recoveryWith")
+    val dir = tmp("whole-recovery")
+    chunkedCache(a, dir)
+    val heads = StreamingHeadCache.readHeads(spark, dir)
+    val wm = StreamingHeadCache.watermark(spark, dir)
+    val table = Snapshots.table(a).select(recoveryCols.map(col): _*)
+    Seq("stored" -> snaps, "fixture" -> table).foreach { case (what, sn) =>
+      assertSameRows(
+        Snapshots.recoveryOver(Replay.mergedReadAtWatermark(a, heads, wm).select(recoveryCols.map(col): _*), sn),
+        ReplayComposition.recoveryOver(
+          ReplayComposition.mergedReadAtWatermark(a, heads, wm).select(recoveryCols.map(col): _*), sn),
+        s"recoveryOver ($what snapshots)")
+    }
+    assertSameRows(
+      StreamingHeadCache.cachedRecoveryQuery(spark, a),
+      ReplayComposition.recoveryOver(
+        ReplayComposition.mergedReadAtWatermark(a, heads, wm).select(recoveryCols.map(col): _*), table),
+      "j1c")
+    snaps.unpersist(false)
+    a.unpersist(false)
+  }
+
   test("job count: one recovery, read and pointer stay a fixed handful of jobs") {
     val a = actions.cache()
     a.count()
@@ -351,6 +437,28 @@ class CachedReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(jobsOf(journal.readCached(t, i, dir).collect()) <= 2)
       // an append head answers from one collect of the cache rows
       assert(jobsOf(journal.pointerCached(t, i, dir).collect()) <= 1)
+      // the whole-log read steps of j1b and j1c over the built cache: the
+      // driver collect of the cache's watermark rows, the range
+      // partitioner's sketch and its re-sample of the log's partitions
+      // (the union's small cache partitions leave them imbalanced), the
+      // fold's exchange and the result — and for j1c the fixture
+      // snapshot table's own window exchange
+      val j1b = jobsOf(CachedReplay.throughCache(spark, a, dir, None).collect())
+      val table = Snapshots.table(a).select(recoveryCols.map(col): _*)
+      val j1c = jobsOf(CachedReplay.throughCache(spark, a, dir, Some(table)).collect())
+      // the public forms those queries answer for, over readHeads
+      val gated = jobsOf(Replay.mergedReadGated(a, StreamingHeadCache.readHeads(spark, dir)).collect())
+      val composed = jobsOf(
+        Snapshots.recoveryOver(
+          Replay
+            .mergedReadAtWatermark(a, StreamingHeadCache.readHeads(spark, dir), StreamingHeadCache.watermark(spark, dir))
+            .select(recoveryCols.map(col): _*),
+          table
+        ).collect())
+      info(s"jobs: j1b read $j1b, j1c read $j1c, mergedReadGated over readHeads $gated, " +
+        s"recoveryOver ∘ mergedReadAtWatermark $composed")
+      assert(j1b <= 5)
+      assert(j1c <= 6)
     } finally spark.sparkContext.removeSparkListener(listener)
     a.unpersist(false)
   }
